@@ -200,22 +200,10 @@ def main() -> None:
     # headline: flagship spatial join + tile assignment (pages/sec basis)
     run("flagship_pip_tiles",
         lambda: pipeline.flagship(pages, admin, zoom=12).count())
-    # the JVM ray-cast refine is the default broadcast path (r2
-    # verdict: bench it under this name); the pandas PolygonIndex
-    # kernel is kept as a parity entry for its boundary-eps semantics
+    # the broadcast join, the flagship's refine, against the grid layer
     run("pip_broadcast_4096",
-        lambda: pipeline.pip_join_broadcast_jvm(
-            pipeline.with_cell(pipeline.extract_points(pages)), grid,
-            index_res=7).count())
-    # pandas-parity entry on a bounded slice: the PolygonIndex kernel
-    # is Arrow-feed-bound and kept only for boundary-eps semantics —
-    # a deterministic quarter of the pages (hash filter, NOT limit()
-    # which collapses parallelism) shows the parity cost without
-    # letting one slow kernel dominate the suite
-    pages_q = pages.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
-    run("pip_broadcast_pandas_quarter",
         lambda: pipeline.pip_join_broadcast(
-            pipeline.with_cell(pipeline.extract_points(pages_q)), grid,
+            pipeline.with_cell(pipeline.extract_points(pages)), grid,
             index_res=7).count())
     run("tile_pyramid_z12_z0",
         lambda: tiles.build_pyramid(

@@ -11,6 +11,7 @@ Usage:
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -23,12 +24,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    noop = "--noop" in sys.argv
-    reps = 2
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1])
+    ap = argparse.ArgumentParser(description="Time registry queries.")
+    ap.add_argument("queries", nargs="+", help="registry query names")
+    ap.add_argument("--noop", action="store_true",
+                    help="noop sink instead of count + xxhash64")
+    ap.add_argument("--reps", type=int, default=2,
+                    help="runs per query; the first is the warm-up")
+    opts = ap.parse_args()
+    noop, reps = opts.noop, opts.reps
     from pyspark.sql import functions as F
     from mobilitydb_spark.queries import registry
     from mobilitydb_spark.session import get_spark
@@ -43,7 +46,7 @@ def main() -> None:
                          F.bit_xor(F.xxhash64(*cols)).alias("chk")).collect()
 
     out = {}
-    for name in args:
+    for name in opts.queries:
         fn, _ = reg[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         times = []

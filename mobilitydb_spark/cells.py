@@ -145,22 +145,44 @@ def grid_rect_np(cell: np.ndarray, kx: int, ky: int) -> np.ndarray:
 
 
 def cover_res_np(lon_min, lat_min, lon_max, lat_max, res: int,
-                 max_cells: int = 4096) -> int:
-    """The resolution ``cover_bbox_np`` would cover this bbox at.
+                 max_cells: int = 4096):
+    """The resolution ``cover_bbox_np`` would cover each bbox at: the
+    finest r <= res whose cover fits ``max_cells`` cells, 0 if none.
 
     Bounds-only (no cell materialization) — lets a caller enumerate
     the distinct cover levels of a polygon layer without evaluating
-    the full cover explosion."""
-    r = res
-    while r > 0:
-        x0, y1 = xy_np(np.array([lon_min]), np.array([lat_min]), r)
-        x1, y0 = xy_np(np.array([lon_max]), np.array([lat_max]), r)
-        nx = int(x1[0] - x0[0] + 1)
-        ny = int(y1[0] - y0[0] + 1)
-        if nx * ny <= max_cells:
+    the full cover explosion.  Scalar bounds give an int, arrays an
+    array."""
+    r = np.zeros(np.shape(lon_min), dtype=np.int64)
+    todo = np.ones(r.shape, dtype=bool)
+    for rr in range(res, 0, -1):
+        x0, y1 = xy_np(lon_min, lat_min, rr)
+        x1, y0 = xy_np(lon_max, lat_max, rr)
+        fits = todo & ((x1 - x0 + 1) * (y1 - y0 + 1) <= max_cells)
+        r = np.where(fits, rr, r)
+        todo &= ~fits
+        if not todo.any():
             break
-        r -= 1
-    return r
+    return int(r) if r.ndim == 0 else r
+
+
+def cover_bboxes_np(lon_min, lat_min, lon_max, lat_max, res: int,
+                    max_cells: int = 4096):
+    """``cover_bbox_np`` of N bboxes at once, with no Python loop:
+    (cells, owner), ``owner[i]`` the index of the bbox cell i covers."""
+    lon_min, lat_min, lon_max, lat_max = (
+        np.atleast_1d(np.asarray(a, dtype=np.float64))
+        for a in (lon_min, lat_min, lon_max, lat_max))
+    r = cover_res_np(lon_min, lat_min, lon_max, lat_max, res, max_cells)
+    x0, y1 = xy_np(lon_min, lat_min, r)
+    x1, y0 = xy_np(lon_max, lat_max, r)
+    ny = y1 - y0 + 1
+    count = (x1 - x0 + 1) * ny
+    owner = np.repeat(np.arange(len(r)), count)
+    k = np.arange(len(owner)) - np.repeat(np.cumsum(count) - count, count)
+    gx = x0[owner] + k // ny[owner]
+    gy = y0[owner] + k % ny[owner]
+    return (r[owner] << R_BITS) | (gx << X_BITS) | gy, owner
 
 
 def cover_bbox_np(lon_min, lat_min, lon_max, lat_max, res: int,
@@ -172,13 +194,8 @@ def cover_bbox_np(lon_min, lat_min, lon_max, lat_max, res: int,
     more than ``max_cells``, the resolution is coarsened — covers are
     conservative by construction, the refine step stays exact.
     """
-    r = cover_res_np(lon_min, lat_min, lon_max, lat_max, res, max_cells)
-    x0, y1 = xy_np(np.array([lon_min]), np.array([lat_min]), r)
-    x1, y0 = xy_np(np.array([lon_max]), np.array([lat_max]), r)
-    xs = np.arange(x0[0], x1[0] + 1, dtype=np.int64)
-    ys = np.arange(y0[0], y1[0] + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return (np.int64(r) << R_BITS) | (gx.ravel() << X_BITS) | gy.ravel()
+    return cover_bboxes_np(lon_min, lat_min, lon_max, lat_max, res,
+                           max_cells)[0]
 
 
 # ---------------------------------------------------------------------------

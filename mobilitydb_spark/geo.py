@@ -11,9 +11,10 @@ Arrow-batched pandas UDFs with no per-row Python:
 - even-odd ray-casting point-in-polygon, M points × polygon at once
 - segment intersection tests (for polygon-boundary crossing)
 - planar + great-circle (haversine) distances
-- ``PolygonIndex``: a grid-bucketed polygon lookup built once per
-  executor from a broadcast list — the engine's replacement for an
-  in-memory STRtree in the broadcast join path.
+
+``points_in_polygon`` is the reference PIP kernel: the spatial joins
+run the same test as Catalyst expressions (``joins.pip_filter``), and
+the tests compare the two.
 
 All math is float64 and deterministic; epsilon 1e-6 matches the
 reference (`include/temporal.h:30` MOBDB EPSILON).
@@ -406,78 +407,3 @@ def point_polygon_dist(px: np.ndarray, py: np.ndarray, geom: Geometry):
         best = np.minimum(best, d.min(axis=1))
     inside = points_in_polygon(px, py, geom)
     return np.where(inside, 0.0, best)
-
-
-# ---------------------------------------------------------------------------
-# PolygonIndex — broadcastable grid-bucket lookup (STRtree stand-in)
-# ---------------------------------------------------------------------------
-
-class PolygonIndex:
-    """Grid-bucketed polygon candidate lookup.
-
-    Built on the driver from (poly_id, wkb) pairs, broadcast to
-    executors, queried batch-wise inside mapInPandas.  Replaces the
-    reference's GiST index probe (`tpoint_gist.c:51-199`) for the
-    broadcast-join path: bucket cells at ``res`` map to the polygons
-    whose bbox covers them; candidates are refined with exact PIP.
-    """
-
-    def __init__(self, polys: Sequence, res: int = 7, max_cells: int = 4096):
-        self.res = res
-        self.geoms = []
-        self.ids = []
-        buckets: dict[int, list[int]] = {}
-        for i, (pid, wkb) in enumerate(polys):
-            geom = from_wkb(wkb) if isinstance(wkb, (bytes, bytearray)) else wkb
-            self.geoms.append(geom)
-            self.ids.append(pid)
-            b = geom.bounds()
-            if b is None:
-                continue
-            for c in cells.cover_bbox_np(*b, res=res, max_cells=max_cells):
-                buckets.setdefault(int(c), []).append(i)
-        self._buckets = {k: np.array(v, dtype=np.int64) for k, v in buckets.items()}
-
-    def query_points(self, lon: np.ndarray, lat: np.ndarray):
-        """Return (point_idx, poly_idx) candidate pairs for a batch."""
-        lon = np.asarray(lon, dtype=np.float64)
-        lat = np.asarray(lat, dtype=np.float64)
-        cell = cells.cell_np(lon, lat, self.res)
-        # bucket cells may be coarser than self.res (cover_bbox coarsens);
-        # probe every resolution present in the bucket map
-        reslist = sorted({int(c) >> cells.R_BITS for c in self._buckets})
-        pt_idx: list[np.ndarray] = []
-        pg_idx: list[np.ndarray] = []
-        for r in reslist:
-            probe = cell if r == self.res else cells.cell_parent_np(cell, r)
-            uniq, inv = np.unique(probe, return_inverse=True)
-            for u_i, c in enumerate(uniq):
-                polys = self._buckets.get(int(c))
-                if polys is None:
-                    continue
-                pts = np.nonzero(inv == u_i)[0]
-                pt_idx.append(np.repeat(pts, len(polys)))
-                pg_idx.append(np.tile(polys, len(pts)))
-        if not pt_idx:
-            return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
-        pt = np.concatenate(pt_idx)
-        pg = np.concatenate(pg_idx)
-        # dedupe (a polygon can appear at several resolutions)
-        key = pt * np.int64(len(self.geoms)) + pg
-        _, first = np.unique(key, return_index=True)
-        return pt[first], pg[first]
-
-    def contains_points(self, lon: np.ndarray, lat: np.ndarray):
-        """Exact (point_idx, poly_id) matches for a batch of points."""
-        pt, pg = self.query_points(lon, lat)
-        if len(pt) == 0:
-            return pt, np.empty(0, dtype=np.int64)
-        keep = np.zeros(len(pt), dtype=bool)
-        for g in np.unique(pg):
-            sel = pg == g
-            keep[sel] = points_in_polygon(
-                np.asarray(lon, dtype=np.float64)[pt[sel]],
-                np.asarray(lat, dtype=np.float64)[pt[sel]],
-                self.geoms[int(g)])
-        ids = np.array(self.ids, dtype=np.int64)
-        return pt[keep], ids[pg[keep]]

@@ -4,11 +4,13 @@ The reference's joins are PostgreSQL index nested loops over GiST
 R-trees (`point/src/sql/70_tpoint_gist.in.sql`,
 `point/src/tpoint_gist.c:51-199`).  On Spark the equivalents are:
 
-- **broadcast path** (small polygon layer): executor-local
-  PolygonIndex, map-only — `pipeline.pip_join_broadcast`
+- **broadcast path** (small polygon layer): the cell cover and the
+  polygon edges ride broadcast joins, no shuffle —
+  `pipeline.pip_join_broadcast`
 - **shuffle path** (large polygon layer, this module): both sides
   keyed by grid cell; polygons exploded to their cell cover, points
   to their single cell; equi-join on cell then exact PIP refine.
+  Both paths refine with the one Catalyst predicate ``pip_filter``.
   A point lives in exactly one cell and a polygon covers that cell
   at most once, so candidate pairs are already distinct — no
   post-refine dedupe shuffle.
@@ -35,10 +37,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, IntegerType, LongType,
-                               StructField, StructType)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from . import cells, geo
 
@@ -46,154 +48,153 @@ DEFAULT_RES = 12
 
 
 # ---------------------------------------------------------------------------
+# the exact PIP refine (one predicate, one boundary rule, both joins)
+# ---------------------------------------------------------------------------
+
+# prefilter padding: the BOUNDARY_EPS band plus slack for the rounding
+# of ``x0 - eps``, so no bbox, cover or edge guard rejects a point the
+# exact on-edge test would accept
+PIP_PAD = 2.0 * geo.BOUNDARY_EPS
+_EDGE_KEYS = ("x1", "y1", "y2", "dx", "dy", "l2", "ex0", "ey0", "ex1", "ey1")
+PIP_DIM_FIELDS = ("edges array<struct<"
+                  + ",".join(f"{k}:double" for k in _EDGE_KEYS)
+                  + ">>, bx0 double, by0 double, bx1 double, by1 double")
+
+
+def pip_polygons(pids, wkbs) -> tuple[np.ndarray, list, np.ndarray]:
+    """Decode a polygon layer: (poly_id (N,), rings, bbox (N, 4)).
+
+    Keeps the rings the PIP test reads (``points_in_polygon`` skips
+    rings of fewer than 4 points) and drops polygons left with none;
+    ``bbox`` is (bx0, by0, bx1, by1) of those rings, dilated by
+    PIP_PAD."""
+    keep, rings, bbox = [], [], []
+    for pid, wkb in zip(pids, wkbs):
+        rs = [r for r, _ in geo.from_wkb(wkb).rings() if len(r) >= 4]
+        if rs:
+            pts = np.vstack(rs)
+            keep.append(pid)
+            rings.append(rs)
+            bbox.append(np.r_[pts.min(axis=0) - PIP_PAD,
+                              pts.max(axis=0) + PIP_PAD])
+    return (np.asarray(keep, dtype=np.int64), rings,
+            np.reshape(bbox, (-1, 4)))
+
+
+def pip_dim_table(pids: np.ndarray, rings: list, bbox: np.ndarray
+                  ) -> pa.Table:
+    """``pip_polygons`` output as an Arrow (poly_id, ``PIP_DIM_FIELDS``)
+    table: one edges list per polygon, built without a Python loop
+    over edges.
+
+    dx, dy and l2 are the very float64 values ``geo.points_in_polygon``
+    computes, so ``pip_filter`` reproduces it bit for bit; ex0..ey1 is
+    the edge's PIP_PAD-dilated bbox, a cheap guard ahead of the
+    projection."""
+    flat = [r for rs in rings for r in rs]
+    p1 = np.concatenate([r[:-1] for r in flat])
+    p2 = np.concatenate([r[1:] for r in flat])
+    (x1, y1), (x2, y2) = p1.T, p2.T
+    dx, dy = x2 - x1, y2 - y1
+    l2 = dx * dx + dy * dy
+    lo, hi = np.minimum(p1, p2) - PIP_PAD, np.maximum(p1, p2) + PIP_PAD
+    edges = pa.StructArray.from_arrays(
+        [x1, y1, y2, dx, dy, np.where(l2 == 0.0, 1.0, l2),
+         lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1]], names=list(_EDGE_KEYS))
+    n = [sum(len(r) - 1 for r in rs) for rs in rings]
+    offsets = np.concatenate([[0], np.cumsum(n)]).astype(np.int32)
+    return pa.table({
+        "poly_id": pids, "edges": pa.ListArray.from_arrays(offsets, edges),
+        "bx0": bbox[:, 0], "by0": bbox[:, 1],
+        "bx1": bbox[:, 2], "by1": bbox[:, 3]})
+
+
+# ``geo.points_in_polygon`` as one SQL predicate over (lon, lat) and a
+# ``pip_dim_table`` row.  SQL text is parsed in one py4j call; building
+# the same tree from Column objects costs a round trip per node, about
+# 0.2 s per join.  _T is ``geo._on_segment``'s clamped projection.
+_T = ("least(greatest(((lon - e.x1) * e.dx + (lat - e.y1) * e.dy) / e.l2,"
+      " 0D), 1D)")
+_PIP_SQL = f"""
+    lon >= bx0 AND lon <= bx1 AND lat >= by0 AND lat <= by1
+    AND (pmod(size(filter(edges, e ->
+             (e.y1 > lat) != (e.y2 > lat)
+             AND lon < e.x1 + (lat - e.y1) / e.dy * e.dx)), 2) = 1
+         OR exists(edges, e ->
+             lon >= e.ex0 AND lon <= e.ex1 AND lat >= e.ey0 AND lat <= e.ey1
+             AND (lon - (e.x1 + {_T} * e.dx)) * (lon - (e.x1 + {_T} * e.dx))
+                 + (lat - (e.y1 + {_T} * e.dy)) * (lat - (e.y1 + {_T} * e.dy))
+                 <= {geo.BOUNDARY_EPS * geo.BOUNDARY_EPS!r}))"""
+
+
+def pip_filter(cand: DataFrame) -> DataFrame:
+    """The exact point-in-polygon refine of candidate pairs.
+
+    ``cand`` carries the point (lon, lat) and its polygon's
+    ``PIP_DIM_FIELDS``.  The test is ``geo.points_in_polygon`` as one
+    Catalyst predicate: even-odd parity over every ring, OR the
+    point within BOUNDARY_EPS of an edge (clamped projection, squared
+    distance <= eps²) — boundary points are inside, as in the
+    reference's ``intersects`` (`66_tpoint_spatialrels.in.sql:32-48`).
+
+    The bbox comparisons run first in whole-stage codegen and reject
+    most candidates; the higher-order functions behind them are
+    interpreted per element.  The on-edge ``exists`` sits right of the
+    OR, so it runs only for points parity puts outside."""
+    return cand.where(_PIP_SQL)
+
+
+# ---------------------------------------------------------------------------
 # polygon cell covers (the "index build" side)
 # ---------------------------------------------------------------------------
 
 def polygon_covers(polygons: DataFrame, res: int = DEFAULT_RES,
-                   max_cells: int = 4096,
-                   with_geom: bool = True) -> DataFrame:
-    """(cell, poly_id[, geom_wkb]): conservative bbox cover per polygon.
+                   max_cells: int = 4096) -> DataFrame:
+    """(cell, poly_id): conservative cover of each polygon's padded bbox.
 
     Coarse polygons fall back to coarser cells (cover_bbox_np caps the
     cell count), so the cell ids carry their resolution in the high
     bits — the join must probe each distinct cover resolution
-    (normally just one).  ``with_geom=False`` omits the WKB column:
-    the shuffle then moves only (cell, poly_id) rows and the geometry
-    is re-attached post-join from the polygon dim — at crawl scale the
-    replicated WKB bytes, not the cell ids, dominate cover shuffle
-    volume.
+    (normally just one).  The rows are slim: at crawl scale replicated
+    geometry, not the cell ids, would dominate cover shuffle volume,
+    so the edges join back on poly_id after the cell join.
     """
-    fields = [StructField("cell", LongType()),
-              StructField("poly_id", LongType())]
-    if with_geom:
-        fields.append(StructField("geom_wkb", BinaryType()))
-    out_schema = StructType(fields)
+    out_schema = StructType([StructField("cell", LongType()),
+                             StructField("poly_id", LongType())])
 
     def explode_cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows_cell, rows_pid, rows_wkb = [], [], []
-            for pid, wkb in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                g = geo.from_wkb(wkb)
-                b = g.bounds()
-                if b is None:
-                    continue
-                cc = cells.cover_bbox_np(*b, res=res, max_cells=max_cells)
-                rows_cell.append(cc)
-                rows_pid.append(np.full(len(cc), pid, dtype=np.int64))
-                if with_geom:
-                    rows_wkb.extend([bytes(wkb)] * len(cc))
-            if not rows_cell:
-                continue
-            out = {"cell": np.concatenate(rows_cell),
-                   "poly_id": np.concatenate(rows_pid)}
-            if with_geom:
-                out["geom_wkb"] = rows_wkb
-            yield pd.DataFrame(out)
+            pids, _, bbox = pip_polygons(pdf["poly_id"], pdf["geom_wkb"])
+            if len(pids):
+                cc, owner = cells.cover_bboxes_np(*bbox.T, res=res,
+                                                  max_cells=max_cells)
+                yield pd.DataFrame({"cell": cc, "poly_id": pids[owner]})
 
     return polygons.select("poly_id", "geom_wkb") \
         .mapInPandas(explode_cover, out_schema)
 
 
-def polygon_cover_res(polygons: DataFrame, res: int = DEFAULT_RES,
-                      max_cells: int = 4096) -> DataFrame:
-    """(poly_id, r): the cover resolution each polygon's bbox selects.
+def polygon_dim(polygons: DataFrame, res: int = DEFAULT_RES,
+                max_cells: int = 4096) -> DataFrame:
+    """(poly_id, r, ``PIP_DIM_FIELDS``): one row per polygon.
 
-    One bounds-only row per polygon — no cell explosion — so a caller
-    can enumerate the distinct cover levels with a job that is
+    ``r`` is the resolution its cover uses; the rest is what
+    ``pip_filter`` reads.  Bounds-only — no cell explosion — so a
+    caller can enumerate the distinct cover levels with a job that is
     O(#polygons), not O(#cover cells)."""
-    out_schema = StructType([StructField("poly_id", LongType()),
-                             StructField("r", IntegerType())])
 
-    def pick(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, rs = [], []
-            for pid, wkb in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                b = geo.from_wkb(wkb).bounds()
-                if b is None:
-                    continue
-                pids.append(pid)
-                rs.append(cells.cover_res_np(*b, res=res,
-                                             max_cells=max_cells))
-            if not pids:
-                continue
-            yield pd.DataFrame({"poly_id": np.asarray(pids, np.int64),
-                                "r": np.asarray(rs, np.int32)})
+    def pick(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            polys = pip_polygons(batch.column("poly_id").to_pylist(),
+                                 batch.column("geom_wkb").to_pylist())
+            if len(polys[0]):
+                r = cells.cover_res_np(*polys[2].T, res=res,
+                                       max_cells=max_cells)
+                yield from pip_dim_table(*polys).add_column(
+                    1, "r", pa.array(r, pa.int32())).to_batches()
 
-    return polygons.select("poly_id", "geom_wkb") \
-        .mapInPandas(pick, out_schema)
-
-
-def _refine_pip(joined: DataFrame, point_cols: list[str]) -> DataFrame:
-    """Exact PIP refine of candidate (point, polygon) pairs."""
-    out_schema = StructType(
-        [f for f in joined.schema.fields
-         if f.name in point_cols + ["poly_id"]])
-    names = [f.name for f in out_schema.fields]
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # decoded-geometry cache lives for the whole TASK (guide §4.5):
-        # with a 4096-polygon layer a 10k-row Arrow batch sees most
-        # polygons only a handful of times, and per-batch decoding paid
-        # ~(batches × polys) from_wkb calls; group on the bigint
-        # poly_id instead of the binary WKB for the cheaper hash.
-        # Axis-aligned rectangles (grid/tile layers) skip the per-group
-        # loop entirely: points_in_polygon for a rect reduces to the
-        # closed box dilated by BOUNDARY_EPS euclidean distance union
-        # the open box (on-edge handling incl. corners — pinned by
-        # tests/test_r06_optimizations.py against the ray-cast kernel),
-        # evaluated for the whole batch against per-row bound arrays.
-        geoms: dict[int, object] = {}
-        rects: dict[int, tuple] = {}  # pid -> (x0, y0, x1, y1) | None
-
-        def decode(pid: int, wkb) -> object:
-            g = geo.from_wkb(wkb)
-            geoms[pid] = g
-            r = None
-            if g.kind == "Polygon" and len(g.parts) == 1:
-                ring = g.parts[0]
-                if (len(ring) == 5 and np.array_equal(ring[0], ring[4])
-                        and all((ring[i][0] == ring[i + 1][0])
-                                != (ring[i][1] == ring[i + 1][1])
-                                for i in range(4))):
-                    xs, ys = ring[:4, 0], ring[:4, 1]
-                    if len(np.unique(xs)) == 2 and len(np.unique(ys)) == 2:
-                        r = (float(xs.min()), float(ys.min()),
-                             float(xs.max()), float(ys.max()))
-            rects[pid] = r
-            return g
-
-        eps2 = geo.BOUNDARY_EPS * geo.BOUNDARY_EPS
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lon = pdf["lon"].to_numpy()
-            lat = pdf["lat"].to_numpy()
-            wkbs = pdf["geom_wkb"].to_numpy()
-            pids = pdf["poly_id"].to_numpy()
-            groups = pdf.groupby("poly_id", sort=False).indices
-            for pid in groups:
-                if pid not in geoms:
-                    decode(pid, wkbs[groups[pid][0]])
-            if all(rects[p] is not None for p in groups):
-                bx0 = np.array([rects[p][0] for p in pids])
-                by0 = np.array([rects[p][1] for p in pids])
-                bx1 = np.array([rects[p][2] for p in pids])
-                by1 = np.array([rects[p][3] for p in pids])
-                ddx = np.maximum(np.maximum(bx0 - lon, lon - bx1), 0.0)
-                ddy = np.maximum(np.maximum(by0 - lat, lat - by1), 0.0)
-                keep = (ddx * ddx + ddy * ddy <= eps2) \
-                    | ((lon > bx0) & (lon < bx1)
-                       & (lat > by0) & (lat < by1))
-            else:
-                for pid, idx in groups.items():
-                    g = geoms[pid]
-                    if g.is_empty:
-                        continue
-                    keep[idx] = geo.points_in_polygon(lon[idx], lat[idx], g)
-            yield pdf.loc[keep, names]
-
-    return joined.mapInPandas(refine, out_schema)
+    return polygons.select("poly_id", "geom_wkb").mapInArrow(
+        pick, f"poly_id bigint, r int, {PIP_DIM_FIELDS}")
 
 
 def hot_cells(points: DataFrame, res: int = DEFAULT_RES,
@@ -219,26 +220,29 @@ def pip_join_shuffle(points: DataFrame, polygons: DataFrame,
 
     Phase 1 (filter): equi-join on grid cell — points carry their
     single cell, polygons their exploded cover (possibly at coarser
-    resolutions, probed per distinct cover_res).  Phase 2 (refine):
-    exact vectorized PIP.  Hot cells get salted: point rows gain
-    ``salt = xxhash64(salt_key) % n_salts`` and matching polygon cover
-    rows are replicated across all salts.
+    resolutions, probed per distinct cover level).  Phase 2 (refine):
+    ``pip_filter`` against the polygon's ``polygon_dim`` row.  Hot
+    cells get salted: point rows gain ``salt = xxhash64(salt_key) %
+    n_salts`` and matching polygon cover rows are replicated across
+    all salts.
     """
     point_cols = [c for c in points.columns]
     pts = points.withColumn(
         "cell", cells.cell_col(F.col("lon"), F.col("lat"), res))
     # SLIM covers: the shuffle moves (cell, poly_id) pairs only; the
-    # WKB geometry joins back on poly_id after the cell equi-join
-    # (Catalyst auto-broadcasts a small dim; AQE converts at runtime
-    # otherwise), so polygon bytes never replicate per cover cell.
-    covers = polygon_covers(polygons, res, with_geom=False)
-    geoms = polygons.select("poly_id", "geom_wkb")
+    # edges join back on poly_id after the cell equi-join (Catalyst
+    # auto-broadcasts a small dim; AQE converts at runtime otherwise),
+    # so polygon bytes never replicate per cover cell.
+    covers = polygon_covers(polygons, res)
+    dim = polygon_dim(polygons, res)
     # polygons may cover at coarser resolutions; probe each present
-    # level — enumerated by a bounds-only O(#polygons) pass, not by
-    # evaluating the cover explosion twice
-    res_rows = [row["r"] for row in
-                polygon_cover_res(polygons, res).select("r")
-                .distinct().collect()]
+    # level — enumerated from the O(#polygons) dim, not by evaluating
+    # the cover explosion twice
+    res_rows = [row["r"] for row in dim.select("r").distinct().collect()]
+    if not res_rows:  # no polygon has a ring the PIP test reads
+        return points.withColumn("poly_id", F.lit(None).cast("bigint")) \
+            .limit(0)
+    dim = dim.drop("r")
     joined_parts = []
     for r in sorted(res_rows):
         cov_r = covers.where(
@@ -262,8 +266,8 @@ def pip_join_shuffle(points: DataFrame, polygons: DataFrame,
             joined = pts_r.join(cov_r, ["jcell", "salt"])
         else:
             joined = pts_r.join(cov_r, "jcell")
-        joined_parts.append(_refine_pip(joined.join(geoms, "poly_id"),
-                                        point_cols))
+        joined_parts.append(pip_filter(joined.join(dim, "poly_id"))
+                            .select(*point_cols, "poly_id"))
     out = joined_parts[0]
     for p in joined_parts[1:]:
         out = out.unionByName(p)
@@ -337,7 +341,11 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     highest latitude a match could sit at, |lat|+dist, so high-latitude
     rows get the wider disk they need instead of silently dropping
     pairs), then an exact haversine refine that stays in whole-stage
-    codegen via the shared `geog.haversine_sql` expression."""
+    codegen via the shared `geog.haversine_sql` expression.
+
+    ``res`` is a floor, not the grid used: the grid is auto-fitted to
+    ``dist_m`` and only ever made finer than ``res``.  The result does
+    not depend on the grid."""
     from .geog import haversine_sql
     # Auto-fit the grid to the query distance (r6): the caller's res is
     # a FLOOR, and the effective resolution sizes cells near the search

@@ -3,8 +3,8 @@
 The end-to-end slice from SURVEY §7: for each web page, extract
 ``geo:lat,lon`` geotags from ``text`` (JVM-side regexp — no Python in
 the extraction hot path), encode each point into the hierarchical
-cell grid, spatially join against a polygon layer (broadcast
-PolygonIndex path for small layers), and assign web-mercator tiles.
+cell grid, spatially join against a small polygon layer (broadcast
+cover and edges, refined in Catalyst), and assign web-mercator tiles.
 
 Semantics parity: the join predicate is the reference's
 ``intersects(geom, tgeompoint)`` filter+refine pattern
@@ -25,14 +25,14 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cells, geo, tiles
+from . import cells, joins, tiles
 
 GEOTAG_RE = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
 DEFAULT_RES = 12  # ~10 km cells at the equator — candidate-filter grain
@@ -56,54 +56,16 @@ def extract_points(pages: DataFrame) -> DataFrame:
 
 
 def with_cell(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    return points.withColumn("cell", cells.cell_col(F.col("lon"), F.col("lat"), res))
-
-
-def pip_join_broadcast(points: DataFrame, polygons_pdf: pd.DataFrame,
-                       index_res: int = 7) -> DataFrame:
-    """Spatial join against a small polygon layer (broadcast path).
-
-    The polygon layer is turned into a PolygonIndex once on the driver
-    and shipped inside the UDF closure (Spark broadcasts closures per
-    task; for very large dims use the shuffle path in joins.py).  No
-    shuffle at all — a map-only join, the plan you want when the dim
-    side fits in executor memory (north rule broadcast phase).
-    """
-    polys = list(zip(polygons_pdf["poly_id"].tolist(),
-                     polygons_pdf["geom_wkb"].tolist()))
-    from pyspark.sql.types import LongType, StructField, StructType
-    names = [f.name for f in points.schema.fields]
-    out_schema = StructType(list(points.schema.fields)
-                            + [StructField("poly_id", LongType())])
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = geo.PolygonIndex(polys, res=index_res)  # built once per task
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pt, pid = idx.contains_points(pdf["lon"].to_numpy(),
-                                          pdf["lat"].to_numpy())
-            out = pdf.iloc[pt].reset_index(drop=True)
-            out["poly_id"] = pid
-            yield out[names + ["poly_id"]]
-
-    return points.mapInPandas(refine, out_schema)
+    # SQL text is parsed in one py4j call; ``cells.cell_col`` builds the
+    # same expression at a round trip per node (~30 per call)
+    return points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
 
 
 def flagship(pages: DataFrame, polygons_pdf: pd.DataFrame,
-             zoom: int = tiles.MAX_ZOOM, res: int = DEFAULT_RES,
-             method: str = "jvm") -> DataFrame:
-    """(url, warc_ts, lang, lon, lat, cell, poly_id, zoom, tile_x, tile_y).
-
-    Default refine is the fully-JVM ray cast (``pip_join_broadcast_jvm``
-    — scales with the scan; the pandas kernel is Arrow-feed-bound in
-    single-JVM local mode).  ``method='pandas'`` keeps the PolygonIndex
-    kernel for geometries that need its boundary-eps semantics; a
-    result-identity test gates the two paths."""
+             zoom: int = tiles.MAX_ZOOM, res: int = DEFAULT_RES) -> DataFrame:
+    """(url, warc_ts, lang, lon, lat, cell, poly_id, zoom, tile_x, tile_y)."""
     pts = with_cell(extract_points(pages), res)
-    join = pip_join_broadcast_jvm if method == "jvm" else pip_join_broadcast
-    joined = join(pts, polygons_pdf)
-    return tiles.assign_tiles(joined, zoom=zoom)
+    return tiles.assign_tiles(pip_join_broadcast(pts, polygons_pdf), zoom=zoom)
 
 
 # ---------------------------------------------------------------------------
@@ -178,89 +140,50 @@ def run_partitioned(spark: SparkSession, pages: DataFrame,
     return stats
 
 
-def pip_join_broadcast_jvm(points: DataFrame, polygons_pdf: pd.DataFrame,
-                           index_res: int | None = None) -> DataFrame:
-    """Broadcast PIP join with a FULLY-JVM refine (no Python at all).
+def pip_join_broadcast(points: DataFrame, polygons_pdf: pd.DataFrame,
+                       index_res: int | None = None) -> DataFrame:
+    """Spatial join against a small polygon layer, with no shuffle and
+    no Python on the executors.
 
-    The even-odd ray cast runs as Catalyst expressions over a
-    broadcast per-polygon edge array: candidates come from a
-    broadcast equi-join on the polygon's cell cover, the crossing
-    count is ``size(filter(edges, crossing_test))`` — one
-    whole-stage-codegen pipeline from parquet scan to join output.
-    Semantics equal the numpy kernel except exact-boundary points
-    (the kernel counts them inside via BOUNDARY_EPS; the expression
-    uses pure parity) — measure-zero for real coordinates.
-
-    Scale note: this is the preferred flagship path — the pandas
-    variant (`pip_join_broadcast`) is Arrow-feed-bound in local mode;
-    this one scales with the scan.
+    The layer is decoded once on the driver into two broadcast dims:
+    its cell cover (``jcell``, ``poly_id``) and one edges + bbox row
+    per polygon.  Candidates come from a broadcast equi-join on the
+    cover; ``joins.pip_filter`` refines them — the same closed-boundary
+    predicate as the shuffle path.  One whole-stage-codegen pipeline
+    runs from the parquet scan to the join output, so the join scales
+    with the scan.
     """
-    import numpy as np
-    from . import cells as C
-
     spark = points.sparkSession
-    geoms = []
-    for pid, wkb in zip(polygons_pdf["poly_id"], polygons_pdf["geom_wkb"]):
-        g = geo.from_wkb(wkb)
-        b = g.bounds()
-        if b is None:
-            continue
-        geoms.append((int(pid), g, b))
-    if not geoms:
+    pids, rings, bbox = joins.pip_polygons(polygons_pdf["poly_id"],
+                                           polygons_pdf["geom_wkb"])
+    if not len(pids):
         # every polygon empty → empty join, not an IndexError in the
         # auto index_res median computation
-        from pyspark.sql.types import LongType, StructField, StructType
-        empty_schema = StructType(list(points.schema.fields)
-                                  + [StructField("poly_id", LongType())])
-        return spark.createDataFrame([], empty_schema)
+        return points.withColumn("poly_id", F.lit(None).cast("bigint")) \
+            .limit(0)
     if index_res is None:
         # size the cover grid to the MEDIAN polygon dimension: a cell
         # much larger than the polygons multiplies candidates per point
         # (each point cell overlaps many polygons), a cell much smaller
         # blows up the broadcast cover list
-        dims = sorted(min(b[2] - b[0], b[3] - b[1]) for _, _, b in geoms)
+        dims = np.sort(np.minimum(bbox[:, 2] - bbox[:, 0],
+                                  bbox[:, 3] - bbox[:, 1]))
         med = max(dims[len(dims) // 2], 1e-6)
         index_res = int(np.clip(round(np.log2(180.0 / med)), 4, 12))
-    cover_rows = []
-    edge_rows = []
-    for pid, g, b in geoms:
-        for c in C.cover_bbox_np(*b, res=index_res):
-            cover_rows.append((int(c), pid))
-        edges = []
-        for ring, _ in g.rings():
-            for i in range(len(ring) - 1):
-                edges.append({"x1": float(ring[i, 0]), "y1": float(ring[i, 1]),
-                              "x2": float(ring[i + 1, 0]),
-                              "y2": float(ring[i + 1, 1])})
-        edge_rows.append((pid, edges, float(b[0]), float(b[1]),
-                          float(b[2]), float(b[3])))
-    cover = spark.createDataFrame(cover_rows, "jcell bigint, poly_id bigint")
-    edges_df = spark.createDataFrame(
-        edge_rows, "poly_id bigint, edges array<struct<x1:double,y1:double,"
-                   "x2:double,y2:double>>, bx0 double, by0 double, "
-                   "bx1 double, by1 double")
+    jcell, owner = cells.cover_bboxes_np(*bbox.T, res=index_res)
+    level = jcell >> cells.R_BITS
+    dim = F.broadcast(spark.createDataFrame(
+        joins.pip_dim_table(pids, rings, bbox)))
 
     out_parts = []
-    res_list = sorted({c >> C.R_BITS for c, _ in cover_rows})
-    for r in res_list:
-        cov_r = cover.where(F.shiftright("jcell", C.R_BITS) == r)
+    for r in np.unique(level).tolist():
+        at_r = level == r
+        cov_r = spark.createDataFrame(
+            pa.table({"jcell": jcell[at_r], "poly_id": pids[owner[at_r]]}))
         pts_r = points.withColumn(
-            "jcell", C.cell_col(F.col("lon"), F.col("lat"), int(r)))
-        px, py = F.col("lon"), F.col("lat")
-        # bbox prefilter FIRST: plain comparisons stay in whole-stage
-        # codegen and reject most candidates before the (interpreted)
-        # higher-order edge filter ever runs
-        cand = (pts_r.join(F.broadcast(cov_r), "jcell")
-                .join(F.broadcast(edges_df), "poly_id")
-                .where((px >= F.col("bx0")) & (px <= F.col("bx1"))
-                       & (py >= F.col("by0")) & (py <= F.col("by1"))))
-        crossing = lambda e: (
-            ((e["y1"] > py) != (e["y2"] > py))
-            & (px < e["x1"] + (py - e["y1"]) / (e["y2"] - e["y1"])
-               * (e["x2"] - e["x1"])))
-        inside = F.pmod(F.size(F.filter(F.col("edges"), crossing)),
-                        F.lit(2)) == 1
-        out_parts.append(cand.where(inside)
+            "jcell", F.expr(cells.cell_sql("lon", "lat", int(r))))
+        cand = pts_r.join(F.broadcast(cov_r), "jcell").join(dim, "poly_id")
+        out_parts.append(joins.pip_filter(cand)
                          .select(*points.columns, "poly_id"))
     out = out_parts[0]
     for p in out_parts[1:]:

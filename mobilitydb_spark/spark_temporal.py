@@ -690,8 +690,11 @@ def tdwithin_pair_stats(points: DataFrame, dist: float,
             lo2, hi2 = t1i[full2], t2i[full2]
             at_lo = lo2 == lower[m2]
             at_hi = hi2 == upper[m2]
-            put(m2, lo2, hi2,
-                np.where(at_lo, True, True),
+            # the lower bound is inclusive either way: at the segment
+            # start it takes li, which is True on a closed sync window
+            # (see above), and past the start the reference's branch
+            # sets it inclusive
+            put(m2, lo2, hi2, True,
                 np.where(at_hi, ui[m2], np.where(at_lo & ~at_hi,
                                                  False, True)))
         if not has.any():

@@ -53,11 +53,14 @@ def tile_sql(lon_expr: str, lat_expr: str, zoom: int) -> tuple[str, str]:
 
 def assign_tiles(points: DataFrame, lon: str = "lon", lat: str = "lat",
                  zoom: int = MAX_ZOOM) -> DataFrame:
-    """Add (zoom, tile_x, tile_y) columns at the given zoom level."""
-    return (points
-            .withColumn("zoom", F.lit(zoom))
-            .withColumn("tile_x", tile_x_col(F.col(lon), zoom))
-            .withColumn("tile_y", tile_y_col(F.col(lat), zoom)))
+    """Add (zoom, tile_x, tile_y) columns at the given zoom level.
+
+    The tile columns are ``tile_sql`` text, parsed in one py4j call
+    each; ``tile_x_col``/``tile_y_col`` build the same expressions at a
+    round trip per node."""
+    tx, ty = tile_sql(f"`{lon}`", f"`{lat}`", zoom)
+    return points.withColumns({"zoom": F.lit(zoom), "tile_x": F.expr(tx),
+                               "tile_y": F.expr(ty)})
 
 
 def build_pyramid(points: DataFrame, lon: str = "lon", lat: str = "lat",
@@ -83,11 +86,11 @@ def build_pyramid(points: DataFrame, lon: str = "lon", lat: str = "lat",
         return base
     rollups = {k: (F.sum(k).alias(k) if k.startswith(("n_", "sum_"))
                    else F.max(k).alias(k)) for k in aggs}
-    coarse_structs = F.array(*[
-        F.struct(F.lit(z).alias("zoom"),
-                 F.shiftright(F.col("tile_x"), max_zoom - z).alias("tile_x"),
-                 F.shiftright(F.col("tile_y"), max_zoom - z).alias("tile_y"))
-        for z in range(min_zoom, max_zoom)])
+    # one parsed SQL expression, not ~9 py4j round trips per level
+    coarse_structs = F.expr("array(" + ", ".join(
+        f"struct({z} AS zoom, shiftright(tile_x, {max_zoom - z}) AS tile_x, "
+        f"shiftright(tile_y, {max_zoom - z}) AS tile_y)"
+        for z in range(min_zoom, max_zoom)) + ")")
     coarser = (base.select(F.explode(coarse_structs).alias("lv"), *aggs.keys())
                .select("lv.zoom", "lv.tile_x", "lv.tile_y", *aggs.keys())
                .groupBy("zoom", "tile_x", "tile_y")

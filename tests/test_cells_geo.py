@@ -56,6 +56,38 @@ def test_cover_bbox_coarsens_under_cap():
     assert int(cells.cell_res(cover)[0]) < 15
 
 
+def test_cover_bboxes_matches_per_bbox_loop():
+    """The vectorized cover equals the per-bbox loop it replaced: the
+    finest level whose cell count fits, then every (x, y) x-major."""
+    def loop_cover(x0, y0, x1, y1, res, max_cells):
+        r = res
+        while r > 0:
+            ax, ay = cells.xy_np(np.array([x0]), np.array([y0]), r)
+            bx, by = cells.xy_np(np.array([x1]), np.array([y1]), r)
+            if (bx[0] - ax[0] + 1) * (ay[0] - by[0] + 1) <= max_cells:
+                break
+            r -= 1
+        ax, ay = cells.xy_np(np.array([x0]), np.array([y0]), r)
+        bx, by = cells.xy_np(np.array([x1]), np.array([y1]), r)
+        gx, gy = np.meshgrid(np.arange(ax[0], bx[0] + 1),
+                             np.arange(by[0], ay[0] + 1), indexing="ij")
+        return (np.int64(r) << cells.R_BITS) | (gx.ravel() << cells.X_BITS) \
+            | gy.ravel()
+
+    rng = np.random.default_rng(3)
+    x0 = rng.uniform(-185, 185, 300)
+    y0 = rng.uniform(-95, 95, 300)
+    w, h = 10 ** rng.uniform(-6, 2.5, (2, 300))
+    for res, cap in ((12, 256), (15, 4096), (3, 16)):
+        got, owner = cells.cover_bboxes_np(x0, y0, x0 + w, y0 + h, res, cap)
+        rs = cells.cover_res_np(x0, y0, x0 + w, y0 + h, res, cap)
+        for i in range(300):
+            want = loop_cover(x0[i], y0[i], x0[i] + w[i], y0[i] + h[i],
+                              res, cap)
+            assert np.array_equal(got[owner == i], want), i
+            assert rs[i] == cells.cell_res(want[:1])[0], i
+
+
 def test_wkb_roundtrip_polygon():
     ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], dtype=float)
     hole = np.array([[1, 1], [2, 1], [2, 2], [1, 2], [1, 1]], dtype=float)
@@ -96,27 +128,6 @@ def test_point_segment_dist():
     np.testing.assert_allclose(t, [0.0, 1.0])
 
 
-def test_polygon_index_matches_bruteforce():
-    from mobilitydb_spark import fixtures
-    pdf = fixtures.polygons_pd("admin", 32)
-    idx = geo.PolygonIndex(
-        list(zip(pdf["poly_id"], pdf["geom_wkb"])), res=6)
-    rng = np.random.default_rng(1)
-    lon = rng.uniform(-10, 35, 500)
-    lat = rng.uniform(32, 72, 500)
-    pt, pid = idx.contains_points(lon, lat)
-    got = set(zip(pt.tolist(), pid.tolist()))
-    want = set()
-    for _, row in pdf.iterrows():
-        g = geo.from_wkb(row["geom_wkb"])
-        if g.is_empty:
-            continue
-        hits = geo.points_in_polygon(lon, lat, g)
-        for i in np.nonzero(hits)[0]:
-            want.add((int(i), int(row["poly_id"])))
-    assert got == want
-
-
 def test_segment_crosses_polygon():
     ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], dtype=float)
     g = geo.from_wkb(geo.polygon_wkb(ring))
@@ -153,3 +164,32 @@ def test_raster_vector_roundtrip(spark):
     a = {(r.tile_x, r.tile_y): tuple(r.raster) for r in ras.collect()}
     b = {(r.tile_x, r.tile_y): tuple(r.raster) for r in ras2.collect()}
     assert a == b and len(a) > 0
+
+
+def test_sql_text_cells_and_tiles_match_column_forms(spark):
+    """``pipeline.with_cell`` and ``tiles.assign_tiles`` parse
+    ``cells.cell_sql`` / ``tiles.tile_sql`` text; every value must equal
+    the Column functions' (``cell_col``, ``tile_x_col``, ``tile_y_col``),
+    including on cell and tile edges and at the clamps."""
+    import pandas as pd
+    from mobilitydb_spark import pipeline, tiles
+    from pyspark.sql import functions as F
+    rng = np.random.default_rng(11)
+    edges = [-180.0 + k * 360.0 / 32 for k in range(33)]
+    lon = np.r_[rng.uniform(-180, 180, 3000), edges, -0.0, 180.0, -180.0,
+                np.nextafter(-180.0, 0.0), np.nextafter(180.0, 0.0), 8.0]
+    lat = np.r_[rng.uniform(-90, 90, 3000),
+                [-90.0 + k * 180.0 / 32 for k in range(33)], 0.0, 90.0,
+                -90.0, 85.05112878, -85.05112878,
+                np.nextafter(85.05112878, 90.0)]
+    pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    for res in (5, 12):
+        got = tiles.assign_tiles(pipeline.with_cell(pts, res), zoom=res)
+        bad = got.where(
+            (F.col("cell") != cells.cell_col(F.col("lon"), F.col("lat"), res))
+            | (F.col("tile_x") != tiles.tile_x_col(F.col("lon"), res))
+            | (F.col("tile_y") != tiles.tile_y_col(F.col("lat"), res)))
+        assert bad.count() == 0
+        assert dict(got.dtypes) == {"lon": "double", "lat": "double",
+                                    "cell": "bigint", "zoom": "int",
+                                    "tile_x": "bigint", "tile_y": "bigint"}

@@ -377,3 +377,73 @@ def test_knn_long_form_and_broadcast_queries_match_brute(spark):
             got_ids = got[got["q_id"] == qrow["q_id"]] \
                 .sort_values("rank")["c_id"].tolist()
             assert got_ids == brute(qrow), (variant, qrow["q_id"])
+
+
+def test_pip_joins_agree_on_boundary_points(spark):
+    """Both PIP joins apply points_in_polygon's closed-boundary rule:
+    interior, on-edge, corner and ±eps-band points against rectangles
+    sharing an edge and a corner, a slanted triangle edge, a hole and
+    a MultiPolygon."""
+    e = geo.BOUNDARY_EPS
+    x0, y0, x1, y1 = 10.0, 20.0, 30.0, 50.0
+
+    def rect(a, b, c, d):
+        return np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])
+
+    polys = {
+        1: geo.polygon_wkb(rect(x0, y0, x1, y1)),
+        2: geo.polygon_wkb(rect(x1, y0, 40.0, y1)),   # shares x = 30
+        3: geo.polygon_wkb(rect(x1, y1, 40.0, 60.0)),  # corner (30, 50)
+        4: geo.polygon_wkb(np.array([[0.0, 0.0], [8.0, 0.0], [0.0, 6.0],
+                                     [0.0, 0.0]])),   # 3x + 4y = 24
+        5: geo.polygon_wkb(rect(100.0, 0.0, 110.0, 10.0),
+                           [rect(103.0, 3.0, 107.0, 7.0)]),
+        6: geo.multipolygon_wkb([
+            geo.polygon_wkb(rect(120.0, 0.0, 122.0, 2.0)),
+            geo.polygon_wkb(rect(124.0, 0.0, 126.0, 2.0))]),
+    }
+    nx, ny = 0.6, 0.8  # unit normal of the triangle's slanted edge
+    pts = [(20.0, 35.0), (x0, 35.0), (x1, 35.0), (20.0, y0), (20.0, y1),
+           (x0, y0), (x1, y1), (x0 - 2 * e, 35.0), (x0 + 2 * e, 35.0),
+           (x0 - 0.5 * e, 35.0), (x1 + 0.5 * e, y1 + 0.5 * e),
+           (x1 + 2 * e, y1 + 2 * e), (5.0, 35.0), (20.0, 60.0),
+           (x0 - 0.5 * e, y0 - 0.5 * e), (x0, 35.0 + 0.3 * e),
+           (35.0, y1), (x1, 55.0), (x1 - 0.5 * e, y1 + 0.5 * e),
+           (2.0, 2.0), (4.0, 3.0), (8.0, 0.0), (0.0, 6.0),
+           (4.0 + 0.5 * e * nx, 3.0 + 0.5 * e * ny),
+           (4.0 + 2 * e * nx, 3.0 + 2 * e * ny),
+           (4.0 - 2 * e * nx, 3.0 - 2 * e * ny),
+           (101.0, 5.0), (105.0, 5.0), (103.0, 5.0), (107.0, 7.0),
+           (103.0 + 0.5 * e, 5.0), (103.0 + 2 * e, 5.0),
+           (121.0, 1.0), (125.0, 1.0), (123.0, 1.0), (122.0, 1.0),
+           (124.0 - 0.5 * e, 2.0), (124.0 - 2 * e, 1.0)]
+    lon = np.array([p[0] for p in pts])
+    lat = np.array([p[1] for p in pts])
+    want = set()
+    for pid, wkb in polys.items():
+        hit = geo.points_in_polygon(lon, lat, geo.from_wkb(wkb))
+        want |= {(int(i), pid) for i in np.nonzero(hit)[0]}
+
+    polys_pdf = pd.DataFrame({"poly_id": list(polys),
+                              "geom_wkb": list(polys.values())})
+    pts_df = spark.createDataFrame(
+        pd.DataFrame({"pt": np.arange(len(pts)), "lon": lon, "lat": lat}))
+    # the flagship reads the same doubles back from geotag text
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": [f"u{i}" for i in range(len(pts))], "warc_ts": 0,
+        "lang": "en", "text": [f"geo:{y!r},{x!r}" for x, y in pts]}))
+    flag = pipeline.flagship(pages, polys_pdf).select(
+        F.substring("url", 2, 9).cast("long").alias("pt"), "poly_id")
+    got = {}
+    for name, df in (
+            ("flagship", flag),
+            ("broadcast", pipeline.pip_join_broadcast(pts_df, polys_pdf)),
+            ("broadcast_res5", pipeline.pip_join_broadcast(
+                pts_df, polys_pdf, index_res=5)),
+            ("shuffle", joins.pip_join_shuffle(pts_df, spark.createDataFrame(
+                polys_pdf, "poly_id bigint, geom_wkb binary"), res=10))):
+        got[name] = {(r["pt"], r["poly_id"]) for r in df.collect()}
+        assert got[name] == want, (name, sorted(got[name] ^ want))
+    # the shared edge, the shared corner and the hole's edge count
+    assert {(2, 1), (2, 2), (6, 1), (6, 2), (6, 3), (28, 5)} <= want
+    assert (27, 5) not in want and (34, 6) not in want

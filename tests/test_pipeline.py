@@ -73,20 +73,6 @@ def test_flagship_join_matches_bruteforce(spark, pages_df):
     assert len(want) > 0
 
 
-def test_flagship_jvm_and_pandas_paths_identical(spark, pages_df):
-    """Gate for the JVM-default flagship: the Catalyst ray cast and the
-    PolygonIndex pandas kernel produce the same join rows."""
-    polys = fixtures.polygons_pd("admin", 24)
-    cols = ["url", "tag_idx", "poly_id"]
-    jvm = pipeline.flagship(pages_df, polys, method="jvm") \
-        .select(*cols).toPandas()
-    pnd = pipeline.flagship(pages_df, polys, method="pandas") \
-        .select(*cols).toPandas()
-    assert set(map(tuple, jvm.itertuples(index=False))) == \
-        set(map(tuple, pnd.itertuples(index=False)))
-    assert len(jvm) > 0
-
-
 def test_tile_assignment_bounds(spark, pages_df):
     polys = fixtures.polygons_pd("admin", 8)
     out = pipeline.flagship(pages_df, polys, zoom=12).toPandas()
@@ -118,20 +104,23 @@ def test_resumable_run_skips_done_buckets(spark, pages_df, tmp_path):
 
 def test_pip_jvm_all_empty_polygons(spark):
     """ADVICE r2: every polygon empty → empty join result, not an
-    IndexError in the auto index_res median computation."""
+    IndexError in the auto index_res median computation (broadcast) or
+    in the union of per-level parts (shuffle)."""
     import struct
     import pandas as pd
     from pyspark.sql import functions as F
-    from mobilitydb_spark import pipeline
+    from mobilitydb_spark import joins, pipeline
     # POLYGON EMPTY wkb: byte order + type + 0 rings
     empty_wkb = b"\x01" + struct.pack("<I", 3) + struct.pack("<I", 0)
     polys = pd.DataFrame({"poly_id": [1, 2],
                           "geom_wkb": [empty_wkb, empty_wkb]})
     pts = spark.createDataFrame(
         pd.DataFrame({"lon": [1.0, 2.0], "lat": [3.0, 4.0]}))
-    out = pipeline.pip_join_broadcast_jvm(pts, polys)
-    assert out.count() == 0
-    assert out.columns == ["lon", "lat", "poly_id"]
+    for out in (pipeline.pip_join_broadcast(pts, polys),
+                joins.pip_join_shuffle(pts, spark.createDataFrame(
+                    polys, "poly_id bigint, geom_wkb binary"))):
+        assert out.count() == 0
+        assert out.columns == ["lon", "lat", "poly_id"]
 
 
 def test_run_partitioned_buckets_overlap_in_time(spark, pages_df, tmp_path):

@@ -388,30 +388,6 @@ def test_vectorized_at_range_at_box_match_kernels(spark):
         assert b["total_us"] == int(sum(p.upper - p.lower for p in ps2))
 
 
-def test_refine_pip_rect_fast_path_matches_raycast():
-    """The axis-aligned-rect classification in joins._refine_pip must
-    equal points_in_polygon (ray-cast + BOUNDARY_EPS on-edge) for
-    interior/exterior/edge/corner/eps-band points."""
-    from mobilitydb_spark import geo
-    x0, y0, x1, y1 = 10.0, 20.0, 30.0, 50.0
-    ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
-    g = geo.Geometry("Polygon", [ring])
-    e = geo.BOUNDARY_EPS
-    pts = [(20.0, 35.0), (x0, 35.0), (x1, 35.0), (20.0, y0), (20.0, y1),
-           (x0, y0), (x1, y1), (x0 - 2 * e, 35.0), (x0 + 2 * e, 35.0),
-           (x0 - 0.5 * e, 35.0), (x1 + 0.5 * e, y1 + 0.5 * e),
-           (x1 + 2 * e, y1 + 2 * e), (5.0, 35.0), (20.0, 60.0),
-           (x0 - 0.5 * e, y0 - 0.5 * e), (x0, 35.0 + 0.3 * e)]
-    lon = np.array([p[0] for p in pts])
-    lat = np.array([p[1] for p in pts])
-    want = geo.points_in_polygon(lon, lat, g)
-    ddx = np.maximum(np.maximum(x0 - lon, lon - x1), 0.0)
-    ddy = np.maximum(np.maximum(y0 - lat, lat - y1), 0.0)
-    got = (ddx * ddx + ddy * ddy <= e * e) \
-        | ((lon > x0) & (lon < x1) & (lat > y0) & (lat < y1))
-    assert np.array_equal(got, want), list(zip(pts, got, want))
-
-
 def test_minhash_numpy_shingle_combine_matches_catalyst(spark):
     """The in-kernel xxhash64 n-gram combine must equal the zip_with
     chain it replaced (xxhash64 re-seeds from 42 per two-arg call)."""
