@@ -235,3 +235,24 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     y = (f"LEAST(GREATEST(CAST(FLOOR((90.0 - ({lat_expr})) / 180.0 * {n}) "
          f"AS BIGINT), 0), {n - 1})")
     return (f"(CAST({res} AS BIGINT) * {R_SHIFT} + ({x}) * {X_SHIFT} + ({y}))")
+
+
+def grid_disk_sql(cell_expr: str, k_expr: str) -> str:
+    """Spark SQL text: ``grid_disk_np``'s k-ring of a cell as an array
+    of cell ids, with the cell (any resolution) and k per row.
+
+    Longitude wraps modulo 2^r and latitude clamps to the grid, but no
+    cell repeats: the clamped latitude range is shorter at the poles,
+    and a ring wider than the grid takes each column once."""
+    r = f"CAST(shiftright({cell_expr}, {R_BITS}) AS INT)"
+    n = f"shiftleft(1L, {r})"
+    x = f"(shiftright({cell_expr}, {X_BITS}) & {X_SHIFT - 1})"
+    y = f"({cell_expr} & {X_SHIFT - 1})"
+    xs = (f"IF(2 * {k_expr} + 1 >= {n}, sequence(0L, {n} - 1), "
+          f"transform(sequence({x} - {k_expr}, {x} + {k_expr}), "
+          f"v -> pmod(v, {n})))")
+    ys = (f"sequence(greatest({y} - {k_expr}, 0L), "
+          f"least({y} + {k_expr}, {n} - 1))")
+    return (f"flatten(transform({xs}, gx -> transform({ys}, gy -> "
+            f"shiftleft(CAST({r} AS BIGINT), {R_BITS}) "
+            f"| shiftleft(gx, {X_BITS}) | gy)))")

@@ -183,20 +183,7 @@ def ivf_topk(queries: DataFrame, candidates: DataFrame, k: int,
     cand = probes.join(cass, "cluster") \
         .where(F.col(q_id) != F.col(c_id))
     scored = _scored_pairs(cand, q_id, c_id)
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    # persist the ranked candidates: the subtree feeds the found>=k
-    # gate, the good semi-join AND the brute fallback's anti-join —
-    # unpersisted, the assignment+rerank pipeline re-executes once per
-    # consumer inside the single output action (the knn_join gating
-    # pattern; rows are ~|Q|*k, negligible storage)
-    ranked = (scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)).persist()
-    full = (ranked.groupBy(q_id).count().where(F.col("count") >= k)
-            .select(q_id))
-    good = ranked.join(full, q_id, "left_semi")
-    redo = queries.join(full, q_id, "left_anti")
-    brute = brute_topk(redo, candidates, k, q_id, c_id, vec)
-    return good.unionByName(brute)
+    return _fill_topk(scored, queries, candidates, k, q_id, c_id, vec)
 
 
 def lsh_topk(queries: DataFrame, candidates: DataFrame, k: int,
@@ -228,18 +215,24 @@ def lsh_topk(queries: DataFrame, candidates: DataFrame, k: int,
     scored = cand.select(q_id, c_id,
                          F.round(_dot(F.col("qe"), F.col("ce")), 6)
                          .alias("score"))
+    return _fill_topk(scored, queries, candidates, k, q_id, c_id, vec)
+
+
+def _fill_topk(scored: DataFrame, queries: DataFrame, candidates: DataFrame,
+               k: int, q_id: str, c_id: str, vec: str) -> DataFrame:
+    """Each query's k best ``scored`` pairs, and brute force for the
+    queries with fewer than k (including none): the exact-k guarantee.
+
+    A query is full when it has a rank-k row.  Nothing is cached: the
+    ranked rows feed the output and both gates inside the one action
+    that consumes the result, so nothing outlives it."""
     w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    # persisted for the same three-consumer reuse as ivf_topk
     ranked = (scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)).persist()
-    # fallback: any query without a full k bucket-verified neighbours
-    # (including zero bucket hits) goes through the brute path
-    full = (ranked.groupBy(q_id).count().where(F.col("count") >= k)
-            .select(q_id))
+              .where(F.col("rank") <= k))
+    full = ranked.where(F.col("rank") == k).select(q_id)
     good = ranked.join(full, q_id, "left_semi")
     redo = queries.join(full, q_id, "left_anti")
-    brute = brute_topk(redo, candidates, k, q_id, c_id, vec)
-    return good.unionByName(brute)
+    return good.unionByName(brute_topk(redo, candidates, k, q_id, c_id, vec))
 
 
 def cosine_pairs_brute(df: DataFrame, threshold: float,

@@ -32,7 +32,7 @@ R-trees (`point/src/sql/70_tpoint_gist.in.sql`,
 
 from __future__ import annotations
 
-import os
+import math
 from typing import Iterator
 
 import numpy as np
@@ -204,7 +204,7 @@ def hot_cells(points: DataFrame, res: int = DEFAULT_RES,
     One cheap pre-pass aggregation; at 100 TB this is a counts-only
     scan that AQE coalesces, and the result is a tiny driver list."""
     cnt = (points
-           .select(cells.cell_col(F.col("lon"), F.col("lat"), res).alias("cell"))
+           .select(F.expr(cells.cell_sql("lon", "lat", res)).alias("cell"))
            .groupBy("cell").count()
            .where(F.col("count") > threshold)
            .select("cell").collect())
@@ -227,8 +227,7 @@ def pip_join_shuffle(points: DataFrame, polygons: DataFrame,
     all salts.
     """
     point_cols = [c for c in points.columns]
-    pts = points.withColumn(
-        "cell", cells.cell_col(F.col("lon"), F.col("lat"), res))
+    pts = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
     # SLIM covers: the shuffle moves (cell, poly_id) pairs only; the
     # edges join back on poly_id after the cell equi-join (Catalyst
     # auto-broadcasts a small dim; AQE converts at runtime otherwise),
@@ -296,8 +295,7 @@ def dwithin_join(left: DataFrame, right: DataFrame, dist_deg: float,
     kx = min(int(dist_deg / (360.0 / n)) + 1, n)
     ky = min(int(dist_deg / cell_h) + 1, n)
 
-    l_cell = cells.cell_col(F.col("lon"), F.col("lat"), res)
-    lpts = left.withColumn("cell", l_cell)
+    lpts = left.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
 
     disk_schema = StructType(list(lpts.schema.fields)
                              + [StructField("jcell", LongType())])
@@ -319,7 +317,7 @@ def dwithin_join(left: DataFrame, right: DataFrame, dist_deg: float,
     rpts = right.select(
         F.col(right_id), F.col("lon").alias("r_lon"),
         F.col("lat").alias("r_lat")).withColumn(
-        "jcell", cells.cell_col(F.col("r_lon"), F.col("r_lat"), res))
+        "jcell", F.expr(cells.cell_sql("r_lon", "r_lat", res)))
     cand = lexp.join(rpts, "jcell")
     d2 = ((F.col("lon") - F.col("r_lon")) ** 2
           + (F.col("lat") - F.col("r_lat")) ** 2)
@@ -364,8 +362,7 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     # 1° latitude ≈ 110 574 m; longitude degrees shrink by cos(lat)
     lat_pad = dist_m / 110574.0
 
-    lpts = left.withColumn("cell",
-                           cells.cell_col(F.col("lon"), F.col("lat"), res))
+    lpts = left.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
     disk_schema = StructType(list(lpts.schema.fields)
                              + [StructField("jcell", LongType())])
 
@@ -405,7 +402,7 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     rpts = right.select(
         F.col(right_id), F.col("lon").alias("r_lon"),
         F.col("lat").alias("r_lat")).withColumn(
-        "jcell", cells.cell_col(F.col("r_lon"), F.col("r_lat"), res))
+        "jcell", F.expr(cells.cell_sql("r_lon", "r_lat", res)))
     cand = lexp.join(rpts, "jcell")
     dist = F.expr(haversine_sql("lon", "lat", "r_lon", "r_lat"))
     # cheap Δlat short-circuit ahead of the trig: meridional distance
@@ -423,527 +420,132 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
 # kNN join (ring expansion + guaranteed fallback)
 # ---------------------------------------------------------------------------
 
-def _partition_topk(df: DataFrame, k: int, query_id: str,
-                    cand_id: str, compact_rows: int = 2_000_000,
-                    dist_col: str = "dist") -> DataFrame:
-    """Per-PARTITION top-k reduction ahead of the per-query window.
-
-    Narrow (no exchange): runs inside the cell-join stage and keeps, per
-    input partition, only each query's k smallest (dist, cand_id) rows.
-    Exactness: any global top-k row is by definition among the k
-    smallest of its OWN partition, so the union of per-partition top-k
-    sets is a superset of the true result and the downstream window
-    re-ranks it; and ``sum_i min(k, n_i) >= min(k, sum_i n_i)`` keeps
-    the ``found >= k`` guarantee count faithful.  A query's candidates
-    land in at most as many partitions as its disk has distinct cell
-    hashes, so the window exchange shrinks from ~all in-radius
-    candidates per query (pi * factor * k at the adaptive radius) to
-    <= k * |cells|.
-
-    Why Arrow/pandas and not Spark's own WindowGroupLimit partial mode:
-    the JVM pushdown is SORT-based — it must sort the whole task by
-    (query, dist) first, and spatial skew concentrates a dense cell's
-    entire join output in one task (6.5 GB spill measured, see the
-    window note in knn_join).  The heap-shaped reduction here touches
-    rows one bounded Arrow batch at a time (lexsort of ~10k rows) and
-    compacts its per-query accumulator whenever it crosses
-    ``compact_rows``, so the dense task streams in O(batch) memory and
-    never spills, at any skew.
-
-    Default OFF after measurement: on the 8M-corpus x 1M-query scaling
-    workload at local[16]/sp32 the reduction shrank the window
-    exchange ~4x (to 560 MB, zero spill, the downstream rank stage to
-    2-4 s) but the Arrow+lexsort pass costs ~1.7 us per candidate row
-    (~180 task-s) — more than the in-process shuffle+sort it replaces
-    (A/B same-session: 40.5 s off vs 47.5 s on).  It is the right
-    shape only where a shuffled byte costs far more than local CPU —
-    a real NIC-bound cluster, or executor memory too small to sort
-    the window exchange — so it ships as an explicit knob, exactness
-    pinned by test_knn_partial_topk_output_identical.
-    """
-    schema = df.schema
-
-    def _topk_pd(pdf: pd.DataFrame) -> pd.DataFrame:
-        o = np.lexsort((pdf[cand_id].to_numpy(),
-                        pdf[dist_col].to_numpy(),
-                        pdf[query_id].to_numpy()))
-        q = pdf[query_id].to_numpy()[o]
-        idx = np.arange(len(q), dtype=np.int64)
-        starts = np.zeros(len(q), dtype=np.int64)
-        if len(q) > 1:
-            change = np.empty(len(q), dtype=bool)
-            change[0] = True
-            change[1:] = q[1:] != q[:-1]
-            starts = np.maximum.accumulate(np.where(change, idx, 0))
-        return pdf.iloc[o[(idx - starts) < k]]
-
-    def reduce_part(batches: Iterator[pd.DataFrame],
-                    ) -> Iterator[pd.DataFrame]:
-        acc: list[pd.DataFrame] = []
-        acc_rows = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            r = _topk_pd(pdf)
-            acc.append(r)
-            acc_rows += len(r)
-            if acc_rows > compact_rows:
-                comb = _topk_pd(pd.concat(acc, ignore_index=True))
-                acc = [comb]
-                acc_rows = len(comb)
-        if acc:
-            yield _topk_pd(pd.concat(acc, ignore_index=True))
-
-    return df.mapInPandas(reduce_part, schema)
-
-
 def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
              resolutions: tuple[int, ...] = (16, 14, 12, 10, 8),
              rings: int = 1, target_cands: int = 64,
              query_id: str = "q_id", cand_id: str = "c_id",
-             broadcast_queries: bool = False,
-             broadcast_counts: bool | None = None,
              adaptive_factor: float | None = 9.0,
-             brute_pairs_budget: int = 64_000_000,
-             partial_topk: bool = False) -> DataFrame:
-    """k nearest candidate points per query point (planar degrees).
+             brute_pairs_budget: int = 64_000_000) -> DataFrame:
+    """k nearest candidate points per query point (planar degrees):
+    (query_id, cand_id, dist, rank), a query never its own neighbour.
 
-    **Density-adaptive resolution** — the skew answer for kNN: a
-    single grid resolution can't serve both a Zipf hot cluster (one
-    coarse cell holding 30% of all points → quadratic candidate
-    blow-up) and sparse regions (fine cells empty → no candidates).
-    Instead:
+    **Exactness** (`|=|` must order as the true distance does,
+    `56_tpoint_spatialfuncs.in.sql:186-214`): each query searches a
+    radius ``rad`` over a cell cover that holds every candidate within
+    ``rad``, and keeps only the candidates within ``rad``.  If k of
+    them survive, no excluded candidate can displace one, so its top-k
+    is exact.  A query with fewer than k survivors is re-run: by brute
+    force over all candidates when ``n_bad · |C| <= brute_pairs_budget``,
+    otherwise by a 4× widened-ring retry of the same shape whose
+    remaining failures go to brute force.
 
-    1. count candidates per cell at each resolution (one counts-only
-       aggregation at the finest level, coarser levels roll up from
-       the cell counts, all map-side combined);
-    2. each query picks the FINEST resolution whose own-cell count
-       already reaches ``target_cands`` (broadcast count join), so hot
-       queries search small cells and sparse queries coarse ones.
-       The ladder steps by 2 levels (r4: the old (14, 11, 8) ladder's
-       8x-per-axis jumps let hot cells overshoot target_cands by up to
-       64x — measured 2.3x slower on a 10M-candidate corpus);
-    3. queries explode to grid_disk(rings) at their chosen resolution
-       and equi-join candidates on that resolution's cell; per-query
-       top-k by exact distance (partitioned window, no global sort).
-       The branch joins shuffle on the cell: the candidate exchange is
-       one reused subplan across branches and AQE prunes the branches
-       whose query set is empty.  ``broadcast_queries=True`` instead
-       broadcasts the exploded query side (|Q| × 9 cells) — MEASURED
-       SLOWER here (10 s vs 2.5 s on a 10M-candidate corpus) because
-       every branch must then stream the full candidate scan even
-       when it has zero queries, but it remains the right shape when
-       the candidate table is too large to shuffle at all;
-    4. correctness guarantee (`|=|` must equal true NAD ordering,
-       `56_tpoint_spatialfuncs.in.sql:186-214`): a query whose k-th
-       distance exceeds the covered radius ``rings · cell_height`` —
-       or that found fewer than k — re-runs in a brute pass over the
-       (small) remainder.
+    **Shape**: one candidate equi-join and one ``row_number`` window.
 
-    Candidates beyond the guarantee radius are filtered out map-side
-    BEFORE the top-k window — routing-identical, because such a
-    candidate can only matter to a query whose k-th distance exceeds
-    the guarantee, and that query is re-run anyway: pre-filter, it
-    failed ``dmax <= g``; post-filter it fails ``found >= k`` — the
-    same query set retries either way, and a satisfied query's top-k
-    lies entirely within g so its output rows are bit-identical.  This
-    bounds the window's input to the ~pi·target_cands in-radius
-    candidates per query instead of the ladder-overshoot disk
-    population (own-cell count lands anywhere in
-    [target, 16·target) from the 2-level step, ×9 disk cells — up to
-    ~150x target): measured on an 8M-corpus × 1M-query pair, the
-    unfiltered window spilled its sort at shuffle_partitions=cpus and
-    capped scaling at 0.47 efficiency with a ~235 s non-scaling
-    component (BENCH/quiet_knn_interval_r5.log attempt 8).
-
-    ``adaptive_factor`` tightens that filter further, per query, from
-    the own-cell DENSITY: with n candidates in the query's chosen
-    cell (area a), the radius expected to hold ``adaptive_factor·k``
-    candidates is r' = sqrt(factor·k·a / (pi·n)), and the filter uses
-    min(g, r').  The SAME exactness argument applies at any radius:
-    every surviving candidate is within r', every excluded one is
-    beyond r', so ``found >= k`` proves the top-k exact, and a query
-    whose k-th neighbour lies beyond r' simply fails into the
-    widened-ring retry it already had.  The expected window input
-    drops from ~pi·own_n per query (own_n up to 16·target from the
-    ladder step) to ~factor·k — the difference between a spilling
-    sort and an in-memory one at 1M queries (the r5-close profile
-    measured the spilling form at 329→805 task-seconds from 4→16-way
-    concurrency, BENCH/knn_profile_*_r5.txt, while the no-spill sort
-    substrate scales at 0.83).  Queries whose chosen level has no
-    counted cell (the coarsest-level fallback) keep the full g.
-    ``None`` disables (filter at g exactly as before).
+    1. *Level choice.*  Candidates explode once to their cells at every
+       level of ``resolutions`` (a cell id carries its level, so one
+       table serves all levels, counted in one aggregation).  Each
+       query picks the finest level whose own cell holds
+       ``target_cands`` candidates, else the coarsest; that cell's
+       count is its ``own_n``.
+    2. *Radius.*  The guarantee is ``g = rings · cell_height(level)``.
+       With ``adaptive_factor``, ``rad = min(g, r')`` where ``r'`` is the
+       radius expected to hold ``adaptive_factor · k`` candidates at the
+       own-cell density; the argument above holds at any radius.
+    3. *Cover.*  Each query explodes to the ring of cells one ladder
+       level finer than its own (``cells.grid_disk_sql``, built in
+       Catalyst): ``ceil(rad / cell_height)`` rings, at most
+       ``rings · 2^Δlevel``.  Longitude cells are wider than latitude
+       cells, so the latitude ring count covers both axes.
+    4. *Top-k.*  Pairs within ``rad`` are ranked per query; a query is
+       done when it has a rank-k row.  The failed count is the one
+       action in the call; nothing is cached, so nothing outlives it.
     """
-    import math
     from pyspark.sql import Window
-    resolutions = tuple(sorted(resolutions, reverse=True))
-    finest = resolutions[0]
+    lv = sorted(resolutions, reverse=True)
+    last = len(lv) - 1
 
-    cpts = candidates.select(
-        F.col(cand_id), F.col("lon").alias("c_lon"),
-        F.col("lat").alias("c_lat"))
-    for r in resolutions:
-        cpts = cpts.withColumn(
-            f"cell{r}", cells.cell_col(F.col("c_lon"), F.col("c_lat"), r))
-    cpts = cpts.persist()
+    def level(i: str) -> str:
+        return f"element_at(array({', '.join(map(str, lv))}), {i} + 1)"
 
-    qpts = queries
-    for r in resolutions:
-        qpts = qpts.withColumn(
-            f"cell{r}", cells.cell_col(F.col("lon"), F.col("lat"), r))
+    def height(i: str) -> str:
+        return f"(180D / shiftleft(1L, {level(i)}))"
 
-    # per-query resolution choice: finest level whose own cell already
-    # holds >= target_cands candidates.  Counts are computed ONLY for
-    # cells that contain a query (r4: a global per-cell count table at
-    # res 16 is ~|C| rows and broadcasting it per level measured 13x
-    # slower than the whole join) — the tiny query-cell set broadcasts
-    # INTO one exploded candidate scan, the surviving rows aggregate
-    # map-side, and the <= |Q|·levels result broadcasts back.  Cell
-    # ids encode their resolution, so one combined table serves every
-    # level's join without collisions.
-    # ``broadcast_counts``: the broadcast form builds |Q|·levels-row
-    # hash tables ON THE DRIVER — measured ~16 s of serial time per
-    # call at 250k queries (Amdahl fit of the 4→16-core scaling pair:
-    # 0.67 efficiency), which caps scaling however many executors the
-    # cluster has.  Auto mode counts the query side (one narrow job)
-    # and switches to a fully-parallel long-form shuffle join when it
-    # is large; the broadcast form stays the default shape for the
-    # common small-query-set case (it is 13x faster there, see above).
-    if broadcast_counts is None:
-        # the decision only needs "<= 50k or not", so probe with a
-        # LIMIT: CollectLimit executes partitions incrementally and
-        # stops at 50_001 rows, where a full count() scanned (and
-        # re-derived) the whole query relation — a measured ~30
-        # executor-s job of its own on an 8M-row derived input
-        broadcast_counts = (
-            queries.select(query_id).limit(50_001).count() <= 50_000)
-    if broadcast_counts:
-        qcells = (qpts.select(F.explode(F.array(
-            *[F.col(f"cell{r}") for r in resolutions[:-1]])).alias("cell"))
-            .distinct())
-        counts = (cpts.select(F.explode(F.array(
-            *[F.col(f"cell{r}") for r in resolutions[:-1]])).alias("cell"))
-            .join(F.broadcast(qcells), "cell")
-            .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") >= target_cands))
-        for r in resolutions[:-1]:
-            cnt = counts.select(F.col("cell"), F.col("n").alias(f"cnt{r}"))
-            qpts = qpts.join(F.broadcast(cnt),
-                             qpts[f"cell{r}"] == cnt["cell"], "left") \
-                       .drop("cell")
-        # build the chosen-resolution expression finest-first
-        expr = F.lit(resolutions[-1])
-        for r in reversed(resolutions[:-1]):
-            expr = F.when(F.col(f"cnt{r}").isNotNull(), F.lit(r)) \
-                    .otherwise(expr)
-        qpts = qpts.withColumn("res", expr)
-        # own-cell count at the chosen level (null at the coarsest
-        # fallback level, which is never counted) — feeds the
-        # adaptive filter radius
-        own = F.lit(None).cast("long")
-        for r in resolutions[:-1]:
-            own = F.when(F.col("res") == r, F.col(f"cnt{r}")) \
-                   .otherwise(own)
-        qpts = qpts.withColumn("own_n", own)
-    else:
-        # long form: melt the query cells once, count candidates only
-        # in query-occupied cells via ONE shuffle equi-join (cell ids
-        # encode their resolution, so one join serves every level),
-        # and pick the finest satisfied level with a max() — no
-        # driver-side |Q|-sized structure anywhere, every stage
-        # shuffles on a key.  Exactly the semantics of the broadcast
-        # ladder above.
-        qlong = qpts.select(query_id, F.explode(F.array(
-            *[F.struct(F.lit(r).alias("r"),
-                       F.col(f"cell{r}").alias("cell"))
-              for r in resolutions[:-1]])).alias("s")) \
-            .select(query_id, F.col("s.r").alias("r"),
-                    F.col("s.cell").alias("cell"))
-        clong = cpts.select(F.explode(F.array(
-            *[F.col(f"cell{r}") for r in resolutions[:-1]])).alias("cell"))
-        counts = (clong.join(qlong.select("cell").distinct(), "cell")
-                  .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-                  .where(F.col("n") >= target_cands))
-        sat = (qlong.join(counts, "cell")
-               .groupBy(query_id)
-               .agg(F.max(F.struct("r", "n")).alias("s")))
-        qpts = qpts.join(
-            sat.select(query_id, F.col("s.r").alias("res"),
-                       F.col("s.n").alias("own_n")), query_id, "left") \
-            .withColumn("res", F.coalesce(F.col("res"),
-                                          F.lit(resolutions[-1])))
+    def level_cells(lon: str, lat: str) -> str:
+        return ("array(" + ", ".join(cells.cell_sql(lon, lat, r) for r in lv)
+                + ")")
 
-    # coarsest-level own-cell counts: the ladder only counts the finer
-    # levels (they gate the resolution CHOICE), so a query that falls
-    # back to the coarsest level used to carry own_n = NULL and the
-    # density-adaptive filter radius silently stayed at the full disk
-    # guarantee — on the 8M x 1M scaling workload that fallback is the
-    # COMMON case (coarse cells hold ~140 candidates, finer ones a
-    # handful), so the top-k window sorted ~300 in-guarantee candidates
-    # per query (6.7 GB / 1340 executor-s measured) instead of the
-    # ~factor*k the adaptive radius promises.  The coarsest level has
-    # at most 4^res cells, so its count table is broadcast-bounded by
-    # construction — no query-cell restriction needed; gate on res<=11
-    # (<= 4M cells) for exotic ladders and fall back to the old
-    # NULL-own_n behaviour (full guarantee) beyond it.
-    coarsest = resolutions[-1]
-    if adaptive_factor is not None and coarsest <= 11:
-        ccnt = cpts.groupBy(F.col(f"cell{coarsest}").alias("_ccell")) \
-                   .agg(F.count(F.lit(1)).alias("_cn"))
-        qpts = qpts.join(F.broadcast(ccnt),
-                         qpts[f"cell{coarsest}"] == F.col("_ccell"),
-                         "left").drop("_ccell")
-        qpts = qpts.withColumn(
-            "own_n",
-            F.coalesce(F.col("own_n"),
-                       F.when(F.col("res") == coarsest, F.col("_cn")))) \
-            .drop("_cn")
+    def cell_at(i: str) -> str:
+        return f"element_at({level_cells('lon', 'lat')}, {i} + 1)"
 
-    # persist: the chosen-resolution ladder (two joins + aggregations
-    # over the candidate scan) feeds every per-resolution branch below
-    # plus the retry pass — unpersisted, each branch re-ran the whole
-    # ladder subtree (5 x ~30 executor-s measured on the 8M x 1M
-    # workload).  |Q| rows x ~12 narrow columns.
-    qpts = qpts.persist()
+    cpts = candidates.selectExpr(cand_id, "lon AS c_lon", "lat AS c_lat")
+    clong = cpts.selectExpr(
+        "*", f"explode({level_cells('c_lon', 'c_lat')}) AS cell")
+    qlong = queries.selectExpr(
+        query_id, "lon", "lat",
+        f"posexplode({level_cells('lon', 'lat')}) AS (i, cell)")
+    counts = clong.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+    # the finest satisfied level has the smallest i
+    qpts = (qlong.join(counts, "cell", "left")
+            .where(f"n >= {target_cands} OR i = {last}")
+            .groupBy(query_id)
+            .agg(F.min("lon").alias("lon"), F.min("lat").alias("lat"),
+                 F.min("i").alias("i"), F.min_by("n", "i").alias("own_n")))
+
+    g = f"{rings} * {height('i')}"
+    rad = g if adaptive_factor is None else (
+        f"IF(own_n > 0, least({g}, sqrt("
+        f"{2.0 * adaptive_factor * k / math.pi!r} * {height('i')}"
+        f" * {height('i')} / own_n)), {g})")
+    j = "greatest(i - 1, 0)"  # the join level: one ladder level finer
+    main = qpts.selectExpr(query_id, "lon", "lat", "i",
+                           f"{rad} AS rad").selectExpr(
+        query_id, "lon", "lat", "rad", f"{cell_at(j)} AS jc",
+        f"least(greatest(CAST(ceil(rad / {height(j)}) AS INT), 1), "
+        f"{rings} * shiftleft(1, {level(j)} - {level('i')})) AS nr")
 
     w = Window.partitionBy(query_id).orderBy(F.asc("dist"), F.asc(cand_id))
     dist = F.sqrt((F.col("lon") - F.col("c_lon")) ** 2
                   + (F.col("lat") - F.col("c_lat")) ** 2)
 
-    parts = []
-    for r in resolutions:
-        guarantee = rings * 180.0 / (1 << r)
-        if adaptive_factor is not None:
-            # radius expected to hold ~factor*k candidates at the
-            # own-cell density n / a_r, clamped to the disk guarantee
-            a_r = (360.0 / (1 << r)) * (180.0 / (1 << r))
-            r_ad = F.sqrt(F.lit(adaptive_factor * k * a_r / math.pi)
-                          / F.col("own_n"))
-            rad = F.when(F.col("own_n").isNotNull()
-                         & (F.col("own_n") > 0),
-                         F.least(F.lit(guarantee), r_ad)) \
-                   .otherwise(F.lit(guarantee))
-        else:
-            rad = F.lit(guarantee)
-        # JOIN one ladder level finer than the guarantee level: the
-        # branch's filter radius (<= the guarantee g) is known per
-        # query, so the cover only needs the rj-cells intersecting
-        # circle(q, rad) — ceil(rad / cell_height(rj)) square rings,
-        # at most rings * 2^(r - rj) of them (coverage parity with the
-        # old r-level disk when rad == g; the square-ring argument is
-        # unchanged because lon cells are WIDER than lat cells in
-        # degrees, so the lat-height ring count dominates).  At the
-        # default 2-level ladder step this shrinks the joined area
-        # from 9 r-cell areas to <= (2*4+1)^2 / 16 ~ 5.1 — and to
-        # ~1.6 when the adaptive radius bites (nr = 2) — which is the
-        # join stage's CPU: measured 1.3e9 -> ~0.3e9 hash-probe +
-        # distance evaluations on the 8M x 1M workload.  The exchange
-        # grows (up to (2 nr_max+1)^2 / (2 rings+1)^2 more exploded
-        # query rows) but stays narrow; the pair cut dominates at any
-        # density that matters.
-        idx = resolutions.index(r)
-        rj = resolutions[idx - 1] if idx > 0 else r
-        h_rj = 180.0 / (1 << rj)
-        nr_max = max(1, rings * (1 << (rj - r))) if rj > r else rings
-        q_r = qpts.where(F.col("res") == r) \
-            .select(query_id, "lon", "lat",
-                    F.col(f"cell{rj}").alias("cell"), rad.alias("rad"))
-        disk_schema = StructType(list(q_r.schema.fields)
-                                 + [StructField("jcell", LongType())])
+    def top_k(pairs: DataFrame) -> DataFrame:
+        return (pairs.where(F.col(query_id) != F.col(cand_id))
+                .select(query_id, cand_id, dist.alias("dist"))
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k))
 
-        def explode_disk(batches: Iterator[pd.DataFrame],
-                         _h=h_rj, _nmax=nr_max,
-                         ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                nr = np.ceil(pdf["rad"].to_numpy() / _h)
-                nr = np.clip(nr, 1, _nmax).astype(np.int64)
-                for kk in np.unique(nr):
-                    sub = pdf[nr == kk]
-                    disk = cells.grid_disk_np(sub["cell"].to_numpy(),
-                                              int(kk))
-                    m = disk.shape[1]
-                    rep = sub.loc[sub.index.repeat(m)] \
-                             .reset_index(drop=True)
-                    rep["jcell"] = disk.ravel()
-                    rep = rep.drop_duplicates(subset=[query_id, "jcell"],
-                                              ignore_index=True)
-                    yield rep
+    def search(q: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(ranked, done): q's (query_id, lon, lat, rad, jc, nr) rows
+        against the candidates within rad, and its queries with k."""
+        pairs = (q.selectExpr(query_id, "lon", "lat", "rad", "explode("
+                              f"{cells.grid_disk_sql('jc', 'nr')}) AS cell")
+                 .join(clong, "cell").where(dist <= F.col("rad")))
+        ranked = top_k(pairs)
+        return ranked, ranked.where(F.col("rank") == k).select(query_id)
 
-        qexp = q_r.mapInPandas(explode_disk, disk_schema)
-        if broadcast_queries:
-            qexp = F.broadcast(qexp)
-        # join strategy: plain sort-merge, measured A/B against a
-        # shuffle_hash hint on the exploded-query build side at the
-        # 8M x 1M workload (post radius-filter + finer-cell cover):
-        # SMJ ran the join stage in 59 executor-s vs 118 for SHJ at 16
-        # cores — the merge's sequential access wins over 0.3e9 random
-        # hash probes once the pair count is filter-bounded, and the
-        # sort spill that once argued for SHJ is gone (922 MB exchange,
-        # zero spill measured at both 4 and 16 cores).
-        cand = qexp.join(
-            cpts.withColumnRenamed(f"cell{rj}", "jcell")
-                .select(cand_id, "c_lon", "c_lat", "jcell"), "jcell") \
-            .where(F.col(query_id) != F.col(cand_id))
-        parts.append(
-            cand.where(dist <= F.col("rad"))
-                .select(query_id, cand_id, dist.alias("dist")))
-    allcand = parts[0]
-    for p in parts[1:]:
-        allcand = allcand.unionByName(p)
-    if partial_topk:
-        allcand = _partition_topk(allcand, k, query_id, cand_id)
-    # NOTE on window-exchange sizing (measured on the 8M x 1M scaling
-    # pair, BENCH/quiet_knn_interval_r5.log): each query carries
-    # ~pi*own_count in-radius candidates (own_count in
-    # [target, 16*target) from the 2-level ladder), so at 1M queries
-    # the top-k window sorts ~3.2e8 narrow rows (measured).  An explicit
-    # repartition(|Q|/1250, query_id) to shrink sort partitions was
-    # tried and REJECTED: it adds a full extra exchange of the
-    # candidate relation (~5.9 GB written, +79 s at 16 cores) to save
-    # a sort spill that adequate executor memory eliminates for free.
-    # The sort partition count is spark.sql.shuffle.partitions — on a
-    # real cluster that is sized to the data (thousands), and the
-    # scaling harness provisions memory per core, so each sort
-    # partition (~|cand|/sp) must fit the per-task execution memory
-    # the deployment provides.
-    # persist: feeds the guarantee check, keep-side anti-join, fallback
-    #
-    # WindowGroupLimit pushdown is DISABLED for this window
-    # (spark.sql.optimizer.windowGroupLimitThreshold=-1, scoped to the
-    # materializing count below): the pushed-down map-side top-k sort
-    # runs INSIDE the cell-partitioned join stage, where spatial skew
-    # concentrates a dense cell's whole join output in one task — the
-    # profiled 8M x 1M workload spilled 6.5 GB there (max task 832 MB,
-    # MEDIAN 0) and that one skewed sort was the job's entire
-    # non-scaling residue.  Without the pushdown the narrow
-    # post-radius-filter rows (~factor*k per query) hash-exchange on
-    # the query id first, and the per-partition sort is balanced by
-    # construction — measured spill-free at every parallelism level.
-    sess = allcand.sparkSession
-    _wgl = "spark.sql.optimizer.windowGroupLimitThreshold"
-    _wgl_old = sess.conf.get(_wgl)
-    sess.conf.set(_wgl, "-1")
-    try:
-        ranked = (allcand
-                  .withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k)).persist()
+    def brute(q: DataFrame) -> DataFrame:
+        return top_k(q.select(query_id, "lon", "lat").crossJoin(cpts))
 
-        # every surviving candidate is within that query's filter
-        # radius (<= the guarantee g), so found >= k alone proves the
-        # query satisfied — no excluded candidate can displace a
-        # survivor; a query with ZERO in-radius candidates has no
-        # per_q row at all, so bad is built by anti-join, not a
-        # found<k filter
-        per_q = ranked.groupBy(query_id).agg(
-            F.count(F.lit(1)).alias("found"))
-        ok = per_q.where(F.col("found") >= k).select(query_id)
-        bad = queries.select(query_id).distinct() \
-                     .join(ok, query_id, "left_anti")
-        n_bad = bad.count()  # materializes `ranked` exactly once
-    finally:
-        sess.conf.set(_wgl, _wgl_old)
-    keep = ranked.select(query_id, cand_id, "dist", "rank")
-    if n_bad == 0:
-        # `ranked` is materialized and holds every row `keep` needs;
-        # release the ladder cache (same lazy pattern as ranked2)
-        qpts.unpersist(blocking=False)
-        return keep
-    good = keep.join(bad, query_id, "left_anti")
+    ranked, done = search(main)
+    bad = qpts.join(done, query_id, "left_anti")
+    # the one action: the failed queries and |C|, summed in one stage
+    n_bad, n_cands = (
+        bad.select(F.lit(1).alias("b"), F.lit(0).alias("c"))
+        .unionByName(cpts.select(F.lit(0).alias("b"), F.lit(1).alias("c")))
+        .agg(F.sum("b"), F.sum("c")).first())
+    if not n_bad:
+        return ranked
+    good = ranked.join(done, query_id, "left_semi")
+    if n_bad * n_cands <= brute_pairs_budget:
+        return good.unionByName(brute(F.broadcast(bad)))
 
-    # tiny-remainder shortcut: the ring retry below is ~15 stages (five
-    # branch joins with mapInPandas explodes, a window, gating
-    # anti-joins — and its unpersisted subtree re-executes once more in
-    # the caller's final evaluation).  When the failed set is small
-    # relative to the corpus, one broadcast brute map-stage is strictly
-    # cheaper: measured at sf0.01 bench scale (2k queries x 100k
-    # candidates, local[8]) a SINGLE under-guaranteed query made the
-    # retry path 14.6 s vs 4.3 s single-pass — the shortcut returns
-    # that to ~one stage.  ``brute_pairs_budget`` is pair-evaluations
-    # (n_bad * |C|, |C| from the already-persisted candidate relation),
-    # so at the 8M scaling corpus only n_bad <= 8 short-circuits and
-    # the bounded ring retry keeps owning the at-scale remainder
-    # (0 disables the shortcut entirely — used by the retry-path
-    # exactness tests, which run at toy |C|).
-    if n_bad * cpts.count() <= brute_pairs_budget:
-        # broadcast the (tiny) failed-query side so the cross join is
-        # a nested-loop STREAMING the cached candidate scan once
-        brute_q = F.broadcast(queries.join(F.broadcast(bad), query_id))
-        brute = (brute_q.crossJoin(cpts.select(cand_id, "c_lon", "c_lat"))
-                 .where(F.col(query_id) != F.col(cand_id))
-                 .select(query_id, cand_id, dist.alias("dist"))
-                 .withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k))
-        qpts.unpersist(blocking=False)
-        return good.unionByName(brute)
-
-    # widened-ring RETRY before brute (a single under-guaranteed query
-    # must not trigger a full candidate scan at scale): re-search each
-    # failed query at its OWN chosen resolution with a 4× ring radius
-    # (retrying at the coarsest resolution would pull a Zipf hot cell's
-    # whole population into every nearby retry); only queries that
-    # STILL miss the widened guarantee fall through to the brute pass.
-    retry_rings = rings * 4
-    redo_base = qpts.join(bad, query_id)
-    rparts = []
-    for r in resolutions:
-        q_r = redo_base.where(F.col("res") == r) \
-            .select(query_id, "lon", "lat",
-                    F.col(f"cell{r}").alias("cell"))
-        retry_schema = StructType(list(q_r.schema.fields)
-                                  + [StructField("jcell", LongType())])
-
-        def explode_retry(batches: Iterator[pd.DataFrame],
-                          ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                disk = cells.grid_disk_np(pdf["cell"].to_numpy(),
-                                          retry_rings)
-                m = disk.shape[1]
-                rep = pdf.loc[pdf.index.repeat(m)].reset_index(drop=True)
-                rep["jcell"] = disk.ravel()
-                rep = rep.drop_duplicates(subset=[query_id, "jcell"],
-                                          ignore_index=True)
-                yield rep
-
-        rexp = q_r.mapInPandas(explode_retry, retry_schema)
-        if broadcast_queries:
-            rexp = F.broadcast(rexp)
-        rc = (rexp
-              .join(cpts.withColumnRenamed(f"cell{r}", "jcell")
-                    .select(cand_id, "c_lon", "c_lat", "jcell"), "jcell")
-              .where(F.col(query_id) != F.col(cand_id)))
-        rguar = retry_rings * 180.0 / (1 << r)
-        rparts.append(rc.select(query_id, cand_id, dist.alias("dist"))
-                        .where(F.col("dist") <= F.lit(rguar)))
-    rall = rparts[0]
-    for p in rparts[1:]:
-        rall = rall.unionByName(p)
-    ranked2 = (rall.withColumn("rank", F.row_number().over(w))
-               .where(F.col("rank") <= k)).persist()
-    per_q2 = ranked2.groupBy(query_id).agg(
-        F.count(F.lit(1)).alias("found"))
-    ok2 = per_q2.where(F.col("found") >= k).select(query_id)
-    bad2 = bad.join(ok2, query_id, "left_anti")
-    n_bad2 = bad2.count()
-    keep2 = ranked2.select(query_id, cand_id, "dist", "rank")
-    # the persist existed to make the gating count cheap; release it
-    # lazily so long-lived sessions don't leak cached partitions
-    # (ranked2 is <= |Q|*k rows — a recompute on final evaluation is
-    # one window over a small relation)
-    ranked2.unpersist(blocking=False)
-    if n_bad2 == 0:
-        return good.unionByName(keep2)
-    good2 = keep2.join(bad2, query_id, "left_anti")
-    brute_q = queries.join(bad2, query_id)  # still-failing rows only
-    brute = (brute_q.crossJoin(cpts.select(cand_id, "c_lon", "c_lat"))
-             .where(F.col(query_id) != F.col(cand_id))
-             .select(query_id, cand_id, dist.alias("dist"))
-             .withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= k))
-    return good.unionByName(good2).unionByName(brute)
+    # retry each failed query at its own level with 4x the rings; a
+    # single failure must not scan every candidate at scale
+    retry = 4 * rings
+    ranked2, done2 = search(bad.selectExpr(
+        query_id, "lon", "lat", f"{retry} * {height('i')} AS rad",
+        f"{cell_at('i')} AS jc", f"{retry} AS nr"))
+    return (good.unionByName(ranked2.join(done2, query_id, "left_semi"))
+            .unionByName(brute(bad.join(done2, query_id, "left_anti"))))
 
 
 def interval_join(left: DataFrame, right: DataFrame,

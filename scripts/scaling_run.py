@@ -141,7 +141,7 @@ def main() -> None:
     # hash so the density-adaptive ladder actually splits levels; a
     # deterministic 1-in-64 hash slice are the queries (NOT limit(),
     # which collapses parallelism).  Exercises the full ladder:
-    # per-cell counts at every resolution, broadcast count join, disk
+    # per-cell counts at every resolution, the level choice, disk
     # explode, windowed top-k.
     hx = F.pmod(F.xxhash64("url", F.lit(5)), F.lit(1_000_000))
     knn_c = jpages.select(
@@ -153,14 +153,8 @@ def main() -> None:
     # ~target_cands candidates regardless of corpus size), so the
     # query side must scale with the corpus for the pair to measure
     # the join rather than the fixed job floor.  The slice REMAINDER
-    # rotates per call: knn_join persists its ranked result
-    # internally, so an identical lambda re-run is served from
-    # Spark's plan cache and times hollow (measured: 6.9 s "rep" vs
-    # 64 s true cost).  Rotating gives every rep an equal-sized,
-    # disjoint, hash-uniform query set and full re-execution; the
-    # corpus-side cell cache (cpts) is plan-identical across calls
-    # and stays warm, which is the deployment shape — corpus prep
-    # amortizes, per-query work does not.
+    # rotates per call, so every rep gets an equal-sized, disjoint,
+    # hash-uniform query set.
     knn_i = {"i": 0}
 
     def knn_op():
@@ -168,12 +162,7 @@ def main() -> None:
         knn_i["i"] += 1
         q = knn_c.where(F.pmod(F.col("c_id"), F.lit(8)) == rem).select(
             F.col("c_id").alias("q_id"), "lon", "lat")
-        # defensive env parse (r5 advice): an exported-but-empty or
-        # non-integer value must not crash the scaling half
-        partial = os.environ.get(
-            "SPARK_GRAFT_KNN_PARTIAL_TOPK", "0").strip().lower() \
-            in ("1", "true", "yes")
-        return joins.knn_join(q, knn_c, 5, partial_topk=partial).count()
+        return joins.knn_join(q, knn_c, 5).count()
 
     # interval-join workload: one span per join-page row over a 30-day
     # domain, duration 0-100 s (hash-distributed) so the expected pair

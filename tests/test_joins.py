@@ -113,26 +113,6 @@ def test_knn_join_matches_bruteforce(spark, pts):
         assert got_ids == want_ids, qrow["q_id"]
 
 
-def test_knn_partial_topk_output_identical(spark, pts):
-    """The per-partition top-k reduction (joins._partition_topk) must
-    be output-invariant: the union of per-partition k-smallest sets is
-    a superset of the true top-k, and sum_i min(k, n_i) >= min(k, n)
-    keeps the found>=k guarantee count faithful.  Exercises q_ids whose
-    candidates span several cell-hash partitions (string ids, multiple
-    resolutions)."""
-    q = pts.select(F.concat_ws("#", "url", "tag_idx").alias("q_id"),
-                   "lon", "lat").limit(60).cache()
-    c = pts.select(F.concat_ws("#", "url", "tag_idx").alias("c_id"),
-                   "lon", "lat")
-    kwargs = dict(resolutions=(12, 10, 8), rings=1, target_cands=8)
-    base = joins.knn_join(q, c, 4, partial_topk=False, **kwargs) \
-        .toPandas().sort_values(["q_id", "rank"], ignore_index=True)
-    red = joins.knn_join(q, c, 4, partial_topk=True, **kwargs) \
-        .toPandas().sort_values(["q_id", "rank"], ignore_index=True)
-    assert len(base) > 0
-    pd.testing.assert_frame_equal(base, red)
-
-
 def test_knn_widened_ring_retry_and_brute(spark):
     """Outlier queries: one whose kNN lies within the 4x widened retry
     radius (retry pass), one whose kNN is beyond it (brute pass) —
@@ -341,42 +321,98 @@ def test_knn_adaptive_radius_output_identical(spark):
     assert (qpdf["lon"] < 11).sum() > 0
 
 
-def test_knn_long_form_and_broadcast_queries_match_brute(spark):
-    """Pin the two non-default knn_join ladder/join forms against
-    brute force on the adaptive-radius fixture: the long-form shuffle
-    ladder (broadcast_counts=False — the >50k-query scale path, where
-    own_n comes from the sat join + the coarsest-level count table)
-    and the broadcast_queries cover form. Both exercise the
-    one-level-finer variable-ring cover introduced in r5-final."""
-    rng = np.random.default_rng(23)
-    dense_lon = 10.0 + rng.uniform(0, 0.1, 600)
-    dense_lat = 50.0 + rng.uniform(0, 0.1, 600)
-    sparse_lon = rng.uniform(-60, 60, 200)
-    sparse_lat = rng.uniform(-40, 40, 200)
-    cpdf = pd.DataFrame({
+def _assert_knn_is_brute(got, qpdf, cpdf, k):
+    """Each query's ranked distances equal numpy brute force over every
+    candidate but itself: min(k, |C| - self) rows, ranks 1..n."""
+    cx, cy = cpdf["lon"].to_numpy(), cpdf["lat"].to_numpy()
+    for _, qrow in qpdf.iterrows():
+        d = np.sqrt((cx - qrow["lon"]) ** 2 + (cy - qrow["lat"]) ** 2)
+        want = np.sort(d[cpdf["c_id"].to_numpy() != qrow["q_id"]])[:k]
+        mine = got[got["q_id"] == qrow["q_id"]].sort_values("rank")
+        assert mine["rank"].tolist() == list(range(1, len(want) + 1)), \
+            qrow["q_id"]
+        np.testing.assert_allclose(mine["dist"].to_numpy(), want,
+                                   rtol=0, atol=1e-12, err_msg=qrow["q_id"])
+
+
+def _skewed_corpus(seed):
+    """A dense 0.1° cluster (fine levels) and a sparse tail (coarse
+    levels and brute-force remainders)."""
+    rng = np.random.default_rng(seed)
+    return pd.DataFrame({
         "c_id": [f"c{i}" for i in range(800)],
-        "lon": np.concatenate([dense_lon, sparse_lon]),
-        "lat": np.concatenate([dense_lat, sparse_lat])})
+        "lon": np.r_[10.0 + rng.uniform(0, 0.1, 600),
+                     rng.uniform(-60, 60, 200)],
+        "lat": np.r_[50.0 + rng.uniform(0, 0.1, 600),
+                     rng.uniform(-40, 40, 200)]})
+
+
+def test_knn_mixed_levels_in_one_join_match_brute(spark):
+    """Queries whose ladder picks different levels share the one
+    candidate join; every level's answer equals brute force, with the
+    default brute remainder and with the ring retry (budget 0)."""
+    import mobilitydb_spark.cells as C
+    cpdf = _skewed_corpus(23)
     qpdf = cpdf.iloc[::13].rename(columns={"c_id": "q_id"}).copy()
+    levels = (12, 10, 8)
+    # non-vacuity: the ladder's choice, recomputed in numpy, differs
+    chosen = set()
+    for lon, lat in zip(qpdf["lon"], qpdf["lat"]):
+        own = [r for r in levels
+               if (C.cell_np(cpdf["lon"], cpdf["lat"], r)
+                   == C.cell_np(np.array([lon]), np.array([lat]), r)).sum()
+               >= 8]
+        chosen.add(own[0] if own else levels[-1])
+    assert len(chosen) >= 2, chosen
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    k = 3
+    for budget in (64_000_000, 0):
+        got = joins.knn_join(q, c, 3, resolutions=levels, rings=1,
+                             target_cands=8,
+                             brute_pairs_budget=budget).toPandas()
+        _assert_knn_is_brute(got, qpdf, cpdf, 3)
 
-    def brute(qrow):
-        d = np.sqrt((cpdf["lon"] - qrow["lon"]) ** 2
-                    + (cpdf["lat"] - qrow["lat"]) ** 2)
-        mask = cpdf["c_id"] != qrow["q_id"]
-        return [cid for _, cid in sorted(zip(d[mask],
-                                             cpdf["c_id"][mask]))[:k]]
 
-    kwargs = dict(resolutions=(12, 10, 8), rings=1, target_cands=8)
-    for variant in (dict(broadcast_counts=False),
-                    dict(broadcast_queries=True)):
-        got = joins.knn_join(q, c, k, **kwargs, **variant).toPandas()
-        for _, qrow in qpdf.iterrows():
-            got_ids = got[got["q_id"] == qrow["q_id"]] \
-                .sort_values("rank")["c_id"].tolist()
-            assert got_ids == brute(qrow), (variant, qrow["q_id"])
+def test_knn_antimeridian_and_poles_match_brute(spark):
+    """Queries within one disk of the antimeridian (the cover wraps in
+    longitude) and of both poles (the cover clamps in latitude), on
+    the main pass and on the retry, equal brute force."""
+    rng = np.random.default_rng(7)
+    centres = [(179.98, 0.0), (-179.98, 10.0), (0.0, 89.98),
+               (120.0, -89.98), (179.98, 89.98)]
+    lon = np.concatenate([np.clip(x + rng.uniform(-0.05, 0.05, 40),
+                                  -180.0, 179.9999) for x, _ in centres])
+    lat = np.concatenate([np.clip(y + rng.uniform(-0.05, 0.05, 40),
+                                  -90.0, 90.0) for _, y in centres])
+    cpdf = pd.DataFrame({"c_id": [f"c{i}" for i in range(len(lon))],
+                         "lon": lon, "lat": lat})
+    # two queries ~0.45° from a cluster: beyond the main pass's radius
+    # at level 10, inside the retry's 4 rings, which wrap and clamp
+    qpdf = pd.concat([
+        cpdf.iloc[::5].rename(columns={"c_id": "q_id"}),
+        pd.DataFrame({"q_id": ["wrap", "pole"], "lon": [179.5, 0.0],
+                      "lat": [0.0, 89.5]})], ignore_index=True)
+    q = spark.createDataFrame(qpdf)
+    c = spark.createDataFrame(cpdf)
+    for budget in (64_000_000, 0):
+        got = joins.knn_join(q, c, 4, resolutions=(14, 12, 10), rings=1,
+                             target_cands=8,
+                             brute_pairs_budget=budget).toPandas()
+        assert not got.duplicated(["q_id", "c_id"]).any()
+        _assert_knn_is_brute(got, qpdf, cpdf, 4)
+
+
+def test_knn_k_above_in_radius_counts_match_brute(spark):
+    """k larger than many queries' in-radius counts: the failures go
+    through the ring retry and then brute force (budget 0) and still
+    equal brute force."""
+    cpdf = _skewed_corpus(31)
+    qpdf = cpdf.iloc[::9].rename(columns={"c_id": "q_id"}).copy()
+    q = spark.createDataFrame(qpdf)
+    c = spark.createDataFrame(cpdf)
+    got = joins.knn_join(q, c, 12, resolutions=(12, 10, 8), rings=1,
+                         target_cands=8, brute_pairs_budget=0).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 12)
 
 
 def test_pip_joins_agree_on_boundary_points(spark):
