@@ -23,10 +23,11 @@ Aggregation kinds: count, and, or, min, max, sum, avg, centroid
 `tpoint_aggfuncs.c:285-489`).
 
 Spark integration: ``temporal_aggregate`` co-partitions long-form
-instant rows by group key and runs the kernel per group inside a
-batched mapInPandas task (`spark_temporal._per_key_kernel`); the
-ungrouped transfn/combinefn split lives in ``partial_profile_rows`` /
-``temporal_agg_pieces``.
+instant rows by group key and runs the kernel per group on the
+per-key substrate (`spark_temporal._per_key_np_kernel`, members split
+inside each group); the ungrouped transfn/combinefn split lives in
+``partial_profile_rows`` / ``temporal_agg_pieces``, on the same
+substrate keyed by member.
 """
 
 from __future__ import annotations
@@ -512,6 +513,16 @@ def wagg(values: list[Temporal], kind: str, window_us: int) -> Temporal | None:
 # followed by ONE cheap merge of the partial piece-lists, whose size is
 # bounded by knot/probe counts, not row counts.
 
+def _member_values(runs, t_us: np.ndarray, vals: np.ndarray,
+                   linear: bool, discrete: bool) -> list[Temporal]:
+    """One Temporal per ``[start, end)`` run of a per-key substrate
+    partition: an instant set when ``discrete``, else a sequence."""
+    if discrete:
+        return [Temporal.instant_set(t_us[a:b], vals[a:b]) for a, b in runs]
+    return [Temporal.sequence(t_us[a:b], vals[a:b], normalize=False,
+                              linear=linear) for a, b in runs]
+
+
 def partial_profile_rows(points: DataFrame, partial_kinds: tuple[str, ...],
                          member: str = "mkey", t: str = "t",
                          value_cols: tuple[str, ...] = ("v",),
@@ -526,29 +537,14 @@ def partial_profile_rows(points: DataFrame, partial_kinds: tuple[str, ...],
     emits its partial result pieces (pid, kind, seq_idx, bounds, t, v).
     """
     from pyspark import TaskContext
-    from .spark_temporal import temporal_from_pdf
+    from .spark_temporal import _per_key_np_kernel, _values
     schema = ("pid int, kind string, seq_idx int, lower_inc boolean, "
               "upper_inc boolean, t_us bigint, vals array<double>")
-    cols = [member, t, *value_cols]
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
 
-    def kernel(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
+    def kernel(keys, starts, ends, t_us, cd):
         pid = TaskContext.get().partitionId()
-        members = []
-        for _, mdf in pdf.groupby(member):
-            mdf = mdf.drop_duplicates(subset=[t]).sort_values(t)
-            if discrete:
-                tt = mdf[t].to_numpy().astype("datetime64[us]") \
-                    .astype(np.int64)
-                members.append(Temporal.instant_set(
-                    tt, mdf[list(value_cols)].to_numpy(dtype=np.float64)))
-            else:
-                members.append(temporal_from_pdf(mdf, t, value_cols,
-                                                 linear=linear))
+        members = _member_values(zip(starts, ends), t_us,
+                                 _values(cd, value_cols), linear, discrete)
         rows = []
         for kind in partial_kinds:
             res = (wagg(members, kind, window_us) if window_us is not None
@@ -560,13 +556,11 @@ def partial_profile_rows(points: DataFrame, partial_kinds: tuple[str, ...],
                     rows.append((pid, kind, si, bool(s.lower_inc),
                                  bool(s.upper_inc), int(s.times[i]),
                                  [float(xv) for xv in s.values[i]]))
-        if rows:
-            yield pd.DataFrame(rows, columns=["pid", "kind", "seq_idx",
-                                              "lower_inc", "upper_inc",
-                                              "t_us", "vals"])
+        return pd.DataFrame(rows, columns=["pid", "kind", "seq_idx",
+                                           "lower_inc", "upper_inc",
+                                           "t_us", "vals"])
 
-    return (points.select(*cols).repartition(n_parts, member)
-            .mapInPandas(kernel, schema))
+    return _per_key_np_kernel(points, member, schema, kernel, t, value_cols)
 
 
 def temporal_from_partial_rows(g: pd.DataFrame, linear: bool,
@@ -732,29 +726,21 @@ def temporal_aggregate(points: DataFrame, kind: str, group: str = "gkey",
     Output: long-form instants of the aggregate
     (group, seq_idx, lower_inc, upper_inc, t, v...).
     """
-    from .spark_temporal import temporal_from_pdf
+    from .spark_temporal import _member_runs, _per_key_np_kernel, _values
     vcols = ", ".join(f"{c} double" for c in
                       (value_cols if kind != "centroid" else ("x", "y")))
     out_cols = value_cols if kind != "centroid" else ("x", "y")
     schema = (f"{group} bigint, seq_idx int, lower_inc boolean, "
               f"upper_inc boolean, t timestamp, {vcols}")
 
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        gk = pdf[group].iloc[0]
-        members = []
-        for _, mdf in pdf.groupby(member):
-            mdf = mdf.drop_duplicates(subset=[t]).sort_values(t)
-            if discrete:
-                tt = mdf[t].to_numpy().astype("datetime64[us]") \
-                    .astype(np.int64)
-                members.append(Temporal.instant_set(
-                    tt, mdf[list(value_cols)].to_numpy()))
-            else:
-                members.append(temporal_from_pdf(mdf, t, value_cols,
-                                                 linear=linear))
-        result = tagg(members, kind)
+    def agg(keys, starts, ends, t_us, cd):
+        vals = _values(cd, value_cols)
         rows = []
-        if result is not None:
+        for gk, s0, e0 in zip(keys, starts, ends):
+            result = tagg(_member_values(_member_runs(cd[member], s0, e0),
+                                         t_us, vals, linear, discrete), kind)
+            if result is None:
+                continue
             for si, s in enumerate(result.seqs):
                 for i in range(len(s.times)):
                     rows.append((gk, si, bool(s.lower_inc),
@@ -764,5 +750,5 @@ def temporal_aggregate(points: DataFrame, kind: str, group: str = "gkey",
         return pd.DataFrame(rows, columns=[group, "seq_idx", "lower_inc",
                                            "upper_inc", t, *out_cols])
 
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(points, group, schema, agg)
+    return _per_key_np_kernel(points, group, schema, agg, t, value_cols,
+                              member)

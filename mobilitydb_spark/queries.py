@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import cells, tiles
+from .spark_temporal import _per_key_np_kernel, _values
 
 # --------------------------------------------------------------------------
 # deterministic derived geo-points over `documents` (shared Spark/DuckDB SQL)
@@ -155,20 +156,21 @@ _ORACLE_EVENTS_HOURLY = """
 def q_geo_cells_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived doc points → grid cell (res 12) + XYZ tile (zoom 12).
 
-    The Spark side uses the engine's Column builders
-    (`cells.cell_col`, `tiles.tile_*_col`); the oracle recomputes via
-    the shared SQL snippets — checks the index math end-to-end.
+    The Spark side parses the engine's SQL text (`cells.cell_sql`,
+    `tiles.tile_sql`) over the derived lon/lat columns, one py4j call
+    per expression; the oracle evaluates the same snippets over the raw
+    expressions in DuckDB.  The Column builders are pinned to the text
+    by tests/test_cells_geo.py.
     """
     docs = _load(spark, sf_dir, "documents")
     pts = docs.select(
         "doc_id",
         F.expr(_LON).alias("lon"),
         F.expr(_LAT).alias("lat"))
-    enc = pts.select(
-        "doc_id",
-        cells.cell_col(F.col("lon"), F.col("lat"), 12).alias("cell"),
-        tiles.tile_x_col(F.col("lon"), 12).alias("tile_x"),
-        tiles.tile_y_col(F.col("lat"), 12).alias("tile_y"))
+    tx, ty = tiles.tile_sql("lon", "lat", 12)
+    enc = pts.selectExpr(
+        "doc_id", f"{cells.cell_sql('lon', 'lat', 12)} AS cell",
+        f"{tx} AS tile_x", f"{ty} AS tile_y")
     return (enc.groupBy("cell", "tile_x", "tile_y")
                .agg(F.count(F.lit(1)).alias("n"),
                     F.min("doc_id").alias("min_doc"))
@@ -776,20 +778,19 @@ def q_traj_ever_in_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     box = G.from_wkb(G.polygon_wkb(np.array(ring)))
 
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        pdf = pdf.drop_duplicates(subset=["t"]).sort_values("t")
-        t = pdf["t"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        tv = Temporal.instant_set(t, pdf[["x", "y"]].to_numpy())
-        return pd.DataFrame([{
-            "key": key,
-            "ever_in": bool(intersects(tv, box)),
-            "always_in": bool(within(tv, box))}])
+    def agg(keys, starts, ends, t_us, cd):
+        xy = _values(cd, ("x", "y"))
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            tv = Temporal.instant_set(t_us[s0:e0], xy[s0:e0])
+            rows.append((kv, bool(intersects(tv, box)),
+                         bool(within(tv, box))))
+        return pd.DataFrame(rows, columns=["key", "ever_in", "always_in"])
 
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(pts, "key",
-                           "key bigint, ever_in boolean, "
-                           "always_in boolean", agg).orderBy("key")
+    return _per_key_np_kernel(pts, "key",
+                              "key bigint, ever_in boolean, "
+                              "always_in boolean", agg,
+                              cols=("x", "y")).orderBy("key")
 
 
 _ORACLE_EVER_IN_BOX = f"""
@@ -2532,29 +2533,29 @@ def q_traj_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_by/max_by/count in SQL (roundtrips must simply hold)."""
     import pandas as pd
     from . import mfjson as MJ
-    from .types import parse_temporal
-    from .spark_temporal import temporal_from_pdf
+    from .types import Temporal, parse_temporal
     pts = _ev_points(spark, sf_dir)
     schema = ("key bigint, n_inst bigint, x_start double, y_start double, "
               "x_end double, y_end double, timespan_us bigint, "
               "io_roundtrip_ok boolean, mfjson_roundtrip_ok boolean")
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf["key"].iloc[0]
-        pdf = pdf.drop_duplicates(subset=["t"]).sort_values("t")
-        tv = temporal_from_pdf(pdf, "t", ("x", "y"))
-        sv, ev = tv.start_value(), tv.end_value()
-        io_ok = str(parse_temporal(str(tv))) == str(tv)
-        mf_ok = str(MJ.from_mfjson(MJ.as_mfjson(tv))) == str(tv)
-        return pd.DataFrame([{
-            "key": kv, "n_inst": tv.num_instants(),
-            "x_start": float(sv[0]), "y_start": float(sv[1]),
-            "x_end": float(ev[0]), "y_end": float(ev[1]),
-            "timespan_us": tv.timespan(),
-            "io_roundtrip_ok": io_ok, "mfjson_roundtrip_ok": mf_ok}])
+    def stats(keys, starts, ends, t_us, cd):
+        xy = _values(cd, ("x", "y"))
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            tv = Temporal.sequence(t_us[s0:e0], xy[s0:e0], normalize=False)
+            sv, ev = tv.start_value(), tv.end_value()
+            rows.append((
+                kv, tv.num_instants(), float(sv[0]), float(sv[1]),
+                float(ev[0]), float(ev[1]), tv.timespan(),
+                str(parse_temporal(str(tv))) == str(tv),
+                str(MJ.from_mfjson(MJ.as_mfjson(tv))) == str(tv)))
+        return pd.DataFrame(rows, columns=[
+            "key", "n_inst", "x_start", "y_start", "x_end", "y_end",
+            "timespan_us", "io_roundtrip_ok", "mfjson_roundtrip_ok"])
 
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(pts, "key", schema, stats).orderBy("key")
+    return _per_key_np_kernel(pts, "key", schema, stats,
+                              cols=("x", "y")).orderBy("key")
 
 
 _ORACLE_ACCESSORS = f"""
@@ -2574,7 +2575,6 @@ def q_casts_tbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     `temporal.h:107-114`): tfloat → TBOX (value × time bounds),
     → period, stepwise tfloat → tint truncation (exact integer sum),
     tint → tfloat roundtrip — oracle: MIN/MAX/TRUNC in SQL."""
-    import numpy as np
     import pandas as pd
     from . import casts as C
     from .types import Temporal
@@ -2583,29 +2583,28 @@ def q_casts_tbox(spark: SparkSession, sf_dir: str) -> DataFrame:
               "tbox_tmin_us bigint, tbox_tmax_us bigint, "
               "period_us bigint, tint_sum bigint, roundtrip_ok boolean")
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf["key"].iloc[0]
-        pdf = pdf.drop_duplicates(subset=["t"]).sort_values("t")
-        tt = pdf["t"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        tv = Temporal.sequence(tt, pdf[["v"]].to_numpy(dtype=np.float64),
-                               linear=False)
-        box = C.tnumber_to_tbox(tv)
-        per = C.to_period(tv)
-        ti = C.tfloat_to_tint(tv)
-        rt = C.tint_to_tfloat(ti)
-        return pd.DataFrame([{
-            "key": kv, "tbox_xmin": box.xmin, "tbox_xmax": box.xmax,
-            "tbox_tmin_us": box.tmin, "tbox_tmax_us": box.tmax,
-            "period_us": per.upper - per.lower,
-            "tint_sum": int(sum(int(s.values[i, 0])
-                                for s in ti.seqs
-                                for i in range(len(s.times)))),
-            "roundtrip_ok": bool(
-                all((a.values == b.values).all()
-                    for a, b in zip(ti.seqs, rt.seqs)))}])
+    def stats(keys, starts, ends, t_us, cd):
+        vs = _values(cd, ("v",))
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            tv = Temporal.sequence(t_us[s0:e0], vs[s0:e0], linear=False)
+            box = C.tnumber_to_tbox(tv)
+            per = C.to_period(tv)
+            ti = C.tfloat_to_tint(tv)
+            rt = C.tint_to_tfloat(ti)
+            rows.append((
+                kv, box.xmin, box.xmax, box.tmin, box.tmax,
+                per.upper - per.lower,
+                int(sum(int(s.values[i, 0])
+                        for s in ti.seqs for i in range(len(s.times)))),
+                bool(all((a.values == b.values).all()
+                         for a, b in zip(ti.seqs, rt.seqs)))))
+        return pd.DataFrame(rows, columns=[
+            "key", "tbox_xmin", "tbox_xmax", "tbox_tmin_us",
+            "tbox_tmax_us", "period_us", "tint_sum", "roundtrip_ok"])
 
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(pts, "key", schema, stats).orderBy("key")
+    return _per_key_np_kernel(pts, "key", schema, stats,
+                              cols=("v",)).orderBy("key")
 
 
 _ORACLE_CASTS = f"""
@@ -2915,7 +2914,6 @@ def q_trajectory_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     formatters provably agree)."""
     import numpy as np
     import pandas as pd
-    from .spark_temporal import _per_key_np_kernel
     pts = _ev_points(spark, sf_dir)
     schema = "key bigint, geom_type string, n_pts int, wkt string"
 
@@ -2955,8 +2953,8 @@ def q_trajectory_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 wkts[g] = f"POINT({coords[0]})"
             else:
                 wkts[g] = "LINESTRING(" + ",".join(coords) + ")"
-        return {"geom_type": types, "n_pts": n_pts.astype(np.int32),
-                "wkt": wkts}
+        return {"key": keys, "geom_type": types,
+                "n_pts": n_pts.astype(np.int32), "wkt": wkts}
 
     return _per_key_np_kernel(pts, "key", schema, stats,
                               cols=("x", "y")).orderBy("key")
@@ -3026,7 +3024,7 @@ def q_spatial_rels_rect_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
     from . import everops, geo as G
-    from .spark_temporal import temporal_from_pdf, _per_key_kernel
+    from .types import Temporal
     pts = _ev_points(spark, sf_dir)
     rects = [
         (rid, G.Geometry("Polygon", [np.array(
@@ -3036,21 +3034,19 @@ def q_spatial_rels_rect_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = ("key bigint, rect_id int, intersects boolean, "
               "within boolean, disjoint boolean")
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf["key"].iloc[0]
-        pdf = pdf.drop_duplicates(subset=["t"]).sort_values("t")
-        tv = temporal_from_pdf(pdf, "t", ("x", "y"))
+    def stats(keys, starts, ends, t_us, cd):
+        xy = _values(cd, ("x", "y"))
         rows = []
-        for rid, rect in rects:
-            rows.append({
-                "key": kv, "rect_id": rid,
-                "intersects": everops.intersects(tv, rect),
-                "within": everops.within(tv, rect),
-                "disjoint": everops.disjoint(tv, rect)})
-        return pd.DataFrame(rows)
+        for kv, s0, e0 in zip(keys, starts, ends):
+            tv = Temporal.sequence(t_us[s0:e0], xy[s0:e0], normalize=False)
+            rows += [(kv, rid, everops.intersects(tv, rect),
+                      everops.within(tv, rect), everops.disjoint(tv, rect))
+                     for rid, rect in rects]
+        return pd.DataFrame(rows, columns=[
+            "key", "rect_id", "intersects", "within", "disjoint"])
 
-    return _per_key_kernel(pts, "key", schema, stats) \
-        .orderBy("key", "rect_id")
+    return _per_key_np_kernel(pts, "key", schema, stats,
+                              cols=("x", "y")).orderBy("key", "rect_id")
 
 
 def _oracle_spatial_rels() -> str:

@@ -1,25 +1,26 @@
 """Spark integration of the temporal kernels.
 
 Table-level temporal operators: rows in *exploded long form*
-(key, t, x[, y]) are grouped per key and assembled into
-``types.Temporal`` values inside ``applyInPandas`` (Arrow-batched,
-one Python call per group batch — no per-row Python), then the numpy
-kernels from restrict/lifting/spatial run per value.
+(key, t, x[, y]) are co-located per key by one repartition, and each
+task flattens its whole partition to numpy once (``_per_key_np_kernel``:
+sort by key and time, drop duplicate knots, find the group bounds).
+The kernels then run either vectorized across every key of the
+partition at once, or per group on array slices that become
+``types.Temporal`` values for the restrict/lifting/spatial kernels.
+The profile aggregates need no Python at all: they are Catalyst
+window and join plans.
 
 This is the engine's equivalent of MobilityDB evaluating
 ``length(trip)`` / ``twAvg(speed(trip))`` per row of a trips table
 (`point/test/queries/56_tpoint_spatialfuncs_tbl.test.sql`): our rows
 are whole trajectories keyed by ``key``.
 
-Scale notes: the only shuffle is the groupBy(key); within a task the
-kernel is vectorized per trajectory.  Keys are assumed to fit a task
-comfortably (trajectories are bounded); for mega-keys use time-window
-sub-splitting upstream.
+Scale notes: the only shuffle is the repartition on the key.  Keys are
+assumed to fit a task comfortably (trajectories are bounded); for
+mega-keys use time-window sub-splitting upstream.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -43,142 +44,120 @@ def temporal_from_pdf(pdf: pd.DataFrame, t_col: str = "t",
     return Temporal.sequence(t, vals, normalize=normalize, linear=linear)
 
 
-def _per_key_kernel(points: DataFrame, key: str, schema: str,
-                    stats) -> DataFrame:
-    """Batched per-group kernel: ONE repartition co-locates each key,
-    then every Arrow-fed partition iterates its groups in-process.
-
-    Replaces groupBy(key).applyInPandas for the per-key temporal
-    kernels: applyInPandas makes one Arrow exchange per GROUP (1500
-    groups = 1500 round trips — measured 5.2 s vs 1.1 s for the same
-    kernel at sf0.1); here the exchange is per PARTITION and the
-    grouping is a pandas groupby inside the task."""
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
-
-    def kernel(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        rows = []
-        for _, g in pdf.groupby(key, sort=False):
-            r = stats(g)
-            if r is not None and len(r):
-                rows.append(r)
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
-
-    return points.repartition(n_parts, key).mapInPandas(kernel, schema)
+def _sortable(a: np.ndarray) -> np.ndarray:
+    """A sort key for ``np.lexsort``: object columns (strings, with
+    nulls) become their sorted factor codes, nulls first."""
+    return pd.factorize(a, sort=True)[0] if a.dtype == object else a
 
 
 def _per_key_np_kernel(points: DataFrame, key: str, schema: str,
-                       np_stats, t: str = "t",
-                       cols: tuple[str, ...] = ()) -> DataFrame:
-    """Vectorized sibling of ``_per_key_kernel`` (r6): ONE repartition
-    co-locates each key, then the kernel flattens the whole partition
-    into numpy arrays ONCE — stable lexsort by (key, t), duplicate
-    (key, t) knots dropped keeping the first-seen row (exactly the
-    drop_duplicates + stable-sort prep every stats callback repeated
-    per group), group bounds via the key-change positions — and hands
-    ``np_stats(keys, starts, ends, t_us, cols_dict)`` the full
-    partition.  ``np_stats`` returns a dict of output-column arrays
-    (one entry per group, aligned with ``keys``), optionally with a
-    ``_mask`` boolean array selecting which groups emit a row.
+                       np_stats, t: str = "t", cols: tuple[str, ...] = (),
+                       member: str | None = None) -> DataFrame:
+    """The per-key substrate every per-trajectory kernel runs on.
 
-    Motivation (measured at sf1.0, 1M instants / 15k keys): the
-    pandas groupby + per-group drop_duplicates/sort_values/one-row
-    DataFrame prep cost ~0.42 s of a 0.73 s partition while the
-    actual numpy kernels cost 0.03 s — the per-key Python/pandas
-    overhead WAS the query (guide §4.2: vectorize across the batch,
-    not per row/group)."""
+    One repartition on ``key`` co-locates each group; each task then
+    flattens its whole partition to numpy once, instead of one pandas
+    groupby (and one sort and dedup) per group:
+
+    - lexsort by (key[, member], t, *cols);
+    - drop duplicate (key[, member], t) knots, keeping the first row
+      of each run: the one with the smallest ``cols`` tuple, so the
+      survivor depends on the rows' values only, never on the order
+      in which the shuffle delivered them;
+    - group bounds from the key changes.
+
+    ``np_stats(keys, starts, ends, t_us, cols)`` then sees the whole
+    partition: group ``i`` has key ``keys[i]`` and owns rows
+    ``starts[i]:ends[i]``; ``t_us`` is int64 microseconds (``t`` as an
+    integer when it is not a timestamp), ascending within a group, or
+    within a member's run when ``member`` is given; ``cols`` maps each
+    column of ``cols``, and ``member``, to its sorted array.  It
+    returns the output columns named in ``schema``, as a dict of
+    equal-length arrays or a DataFrame, with one row per group,
+    several, or none.  Only ``key``, ``member``, ``t`` and ``cols``
+    reach Python.
+
+    Why one pass per partition: at sf1.0 (1M instants, 15k keys) a
+    pandas groupby with a per-group dedup, sort and one-row DataFrame
+    cost ~0.42 s of a 0.73 s partition whose numpy kernels took
+    0.03 s."""
     n_parts = points.sparkSession.sparkContext.defaultParallelism
+    by = [key] if member is None else [key, member]
+    names = list(dict.fromkeys([*by, t, *cols]))
 
     def kernel(batches):
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True)
-        k = pdf[key].to_numpy()
         tv = pdf[t].to_numpy()
         if np.issubdtype(tv.dtype, np.datetime64):
             tv = tv.astype("datetime64[us]").astype(np.int64)
         else:
             tv = tv.astype(np.int64)
-        order = np.lexsort((tv, k))
-        k, tv = k[order], tv[order]
-        dup = np.zeros(len(k), dtype=bool)
-        dup[1:] = (k[1:] == k[:-1]) & (tv[1:] == tv[:-1])
-        cd = {c: pdf[c].to_numpy()[order][~dup] for c in cols}
-        k, tv = k[~dup], tv[~dup]
+        arr = {c: pdf[c].to_numpy() for c in dict.fromkeys([*by, *cols])}
+        order = np.lexsort([_sortable(arr[c]) for c in reversed(cols)]
+                           + [tv]
+                           + [_sortable(arr[c]) for c in reversed(by)])
+        tv = tv[order]
+        arr = {c: a[order] for c, a in arr.items()}
+        first = np.ones(len(tv), dtype=bool)
+        first[1:] = tv[1:] != tv[:-1]
+        for c in by:
+            first[1:] |= arr[c][1:] != arr[c][:-1]
+        tv = tv[first]
+        cd = {c: a[first] for c, a in arr.items()}
+        k = cd.pop(key)
         starts = np.concatenate(([0], np.flatnonzero(k[1:] != k[:-1]) + 1))
         ends = np.concatenate((starts[1:], [len(k)]))
-        keys = k[starts]
-        out = np_stats(keys, starts, ends, tv, cd)
-        mask = out.pop("_mask", None)
-        res = pd.DataFrame({key: keys, **out})
-        if mask is not None:
-            res = res.loc[mask]
+        res = pd.DataFrame(np_stats(k[starts], starts, ends, tv, cd))
         if len(res):
             yield res
 
-    return points.repartition(n_parts, key).mapInPandas(kernel, schema)
+    return (points.select(*names).repartition(n_parts, key)
+            .mapInPandas(kernel, schema))
+
+
+def _member_runs(m: np.ndarray, s0: int, e0: int) -> list[tuple[int, int]]:
+    """``[start, end)`` of each member's run in the group ``s0:e0`` of
+    a partition sorted by (key, member, t)."""
+    b = [s0, *(s0 + 1 + np.flatnonzero(m[s0 + 1:e0] != m[s0:e0 - 1])), e0]
+    return list(zip(b[:-1], b[1:]))
 
 
 def _per_pair_np_kernel(points: DataFrame, pair: str, member: str,
                         schema: str, pair_stats, t: str = "t",
                         cols: tuple[str, ...] = ()) -> DataFrame:
-    """Vectorized sibling of ``_per_key_kernel`` for PAIR kernels
-    (r6): one repartition on ``pair``, partition flattened to numpy
-    once (stable lexsort by (pair, member, t), first-seen dedup of
-    duplicate (pair, member, t) knots — the per-member
-    drop_duplicates + sort prep of the old per-pair callbacks), then
-    ``pair_stats(ta, a_cols, tb, b_cols)`` runs per pair on raw
-    array slices (members ordered by ascending member id, matching
-    the old pandas groupby(member) iteration).  Pairs without exactly
-    two members, or for which ``pair_stats`` returns None, emit no
-    row."""
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
+    """Pair kernels as the member split of the per-key substrate:
+    groups are pairs, runs within a group are its members (ascending
+    member id), and ``pair_stats(ta, a_cols, tb, b_cols)`` runs per
+    pair on the two members' array slices (``cols`` as float64),
+    returning the row after ``pair`` as a tuple.  Pairs without
+    exactly two members, or for which ``pair_stats`` returns None,
+    emit no row."""
     out_cols = [c.strip().split()[0] for c in schema.split(",")]
 
-    def kernel(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        k = pdf[pair].to_numpy()
-        m = pdf[member].to_numpy()
-        tv = pdf[t].to_numpy()
-        if np.issubdtype(tv.dtype, np.datetime64):
-            tv = tv.astype("datetime64[us]").astype(np.int64)
-        else:
-            tv = tv.astype(np.int64)
-        order = np.lexsort((tv, m, k))
-        k, m, tv = k[order], m[order], tv[order]
-        dup = np.zeros(len(k), dtype=bool)
-        dup[1:] = (k[1:] == k[:-1]) & (m[1:] == m[:-1]) \
-            & (tv[1:] == tv[:-1])
-        cd = {c: pdf[c].to_numpy()[order][~dup].astype(np.float64)
-              for c in cols}
-        k, m, tv = k[~dup], m[~dup], tv[~dup]
-        starts = np.concatenate(([0], np.flatnonzero(k[1:] != k[:-1]) + 1))
-        ends = np.concatenate((starts[1:], [len(k)]))
+    def stats(keys, starts, ends, t_us, cd):
+        vals = {c: cd[c].astype(np.float64) for c in cols}
         rows = []
-        for s0, e0 in zip(starts, ends):
-            ms = m[s0:e0]
-            cut = np.flatnonzero(ms[1:] != ms[:-1]) + 1
-            if len(cut) != 1:
+        for kv, s0, e0 in zip(keys, starts, ends):
+            runs = _member_runs(cd[member], s0, e0)
+            if len(runs) != 2:
                 continue
-            mid = s0 + cut[0]
-            ta, tb = tv[s0:mid], tv[mid:e0]
-            a_cols = {c: cd[c][s0:mid] for c in cols}
-            b_cols = {c: cd[c][mid:e0] for c in cols}
-            got = pair_stats(ta, a_cols, tb, b_cols)
+            a, b = slice(*runs[0]), slice(*runs[1])
+            got = pair_stats(t_us[a], {c: v[a] for c, v in vals.items()},
+                             t_us[b], {c: v[b] for c, v in vals.items()})
             if got is not None:
-                rows.append((k[s0],) + tuple(got))
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
+                rows.append((kv, *got))
+        return pd.DataFrame(rows, columns=out_cols)
 
-    return points.repartition(n_parts, pair).mapInPandas(kernel, schema)
+    return _per_key_np_kernel(points, pair, schema, stats, t, cols, member)
+
+
+def _values(cd: dict, cols: tuple[str, ...]) -> np.ndarray:
+    """The ``cols`` arrays of a substrate partition as one (n, d)
+    float64 matrix, for ``Temporal`` constructors on group slices."""
+    return np.column_stack([cd[c] for c in cols]).astype(np.float64)
 
 
 def _samp1(tk: np.ndarray, vk: np.ndarray, ts: np.ndarray) -> np.ndarray:
@@ -263,6 +242,7 @@ def trajectory_metrics(points: DataFrame, key: str = "key",
             twsp = np.where(single, 0.0,
                             sp_num / np.where(den > 0, den, 1.0))
         return {
+            key: keys,
             "length": np.where(single, 0.0, length),
             "speed_max": np.where(single, 0.0, speed_max),
             "speed_twavg": twsp,
@@ -284,20 +264,18 @@ def value_at_timestamp(points: DataFrame, at_ts, key: str = "key",
     schema = f"{key} bigint, {out_vals}"
     at_us = int(np.datetime64(at_ts, "us").astype(np.int64))
 
-    def interp(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf[key].iloc[0]
-        pdf = pdf.drop_duplicates(subset=[t]).sort_values(t)
-        tv = temporal_from_pdf(pdf, t, cols)
-        v = tv.value_at(at_us)
-        if v is None:
-            return pd.DataFrame(columns=[key] +
-                                (["x_at"] if y is None else ["x_at", "y_at"]))
-        row = {key: kv, "x_at": float(v[0])}
-        if y is not None:
-            row["y_at"] = float(v[1])
-        return pd.DataFrame([row])
+    def interp(keys, starts, ends, t_us, cd):
+        vals = _values(cd, cols)
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            v = Temporal.sequence(t_us[s0:e0], vals[s0:e0],
+                                  normalize=False).value_at(at_us)
+            if v is not None:
+                rows.append((kv, *(float(c) for c in v)))
+        return pd.DataFrame(rows,
+                            columns=[key, "x_at", "y_at"][:1 + len(cols)])
 
-    return _per_key_kernel(points, key, schema, interp)
+    return _per_key_np_kernel(points, key, schema, interp, t, cols)
 
 
 def tnumber_twavg(points: DataFrame, key: str = "key", t: str = "t",
@@ -318,7 +296,7 @@ def tnumber_twavg(points: DataFrame, key: str = "key", t: str = "t",
         with np.errstate(divide="ignore", invalid="ignore"):
             tw = np.where(single, vs[np.minimum(starts, len(vs) - 1)],
                           num / np.where(den > 0, den, 1.0))
-        return {"twavg": tw}
+        return {key: keys, "twavg": tw}
 
     return _per_key_np_kernel(points, key, schema, stats, t, (v,))
 
@@ -346,10 +324,8 @@ def _lerp_at_probes(points: DataFrame, probes_us: list[int],
     # value cols as orderBy tiebreakers: with duplicate (key, t_us)
     # knots an order on t_us alone leaves which duplicate survives the
     # lag-dedup nondeterministic (ADVICE r3) — ties now keep the row
-    # with the smallest value tuple, deterministically.  (The kernel
-    # path keeps the first duplicate in input order; fixture data is
-    # pre-deduped per (key, ts), so the two policies only differ on
-    # inputs that are out-of-contract anyway.)
+    # with the smallest value tuple, deterministically, the same rule
+    # as the kernel substrate's (``_per_key_np_kernel``)
     w = Window.partitionBy(key).orderBy(
         "t_us", *[f"_v_{c}" for c in value_cols])
     # dedup INSIDE the window partitioning (one exchange + one sort
@@ -463,30 +439,28 @@ def restrict_period_clip(points: DataFrame, t1_us: int, t2_us: int,
     """Per-key atPeriod restriction to the closed period [t1, t2]
     (atPeriod, `src/temporal.c:2936`): instant count, exact duration,
     and interpolated clip-bound values."""
-    import numpy as np
     from .restrict import at_period
     from .types import Period
     schema = (f"{key} bigint, n_inst bigint, dur_us bigint, "
               "x0 double, y0 double, x1 double, y1 double")
     p = Period(int(t1_us), int(t2_us), True, True)
 
-    def clip(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf[key].iloc[0]
-        pdf = pdf.drop_duplicates(subset=[t]).sort_values(t)
-        tv = temporal_from_pdf(pdf, t, (x, y))
-        got = at_period(tv, p)
-        if got is None:
-            return pd.DataFrame(columns=[key, "n_inst", "dur_us",
-                                         "x0", "y0", "x1", "y1"])
-        first, last = got.seqs[0], got.seqs[-1]
-        return pd.DataFrame([{
-            key: kv, "n_inst": got.num_instants(),
-            "dur_us": got.duration_us(),
-            "x0": float(first.values[0, 0]), "y0": float(first.values[0, 1]),
-            "x1": float(last.values[-1, 0]), "y1": float(last.values[-1, 1]),
-        }])
+    def clip(keys, starts, ends, t_us, cd):
+        vals = _values(cd, (x, y))
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            got = at_period(Temporal.sequence(t_us[s0:e0], vals[s0:e0],
+                                              normalize=False), p)
+            if got is None:
+                continue
+            first, last = got.seqs[0], got.seqs[-1]
+            rows.append((kv, got.num_instants(), got.duration_us(),
+                         float(first.values[0, 0]), float(first.values[0, 1]),
+                         float(last.values[-1, 0]), float(last.values[-1, 1])))
+        return pd.DataFrame(rows, columns=[key, "n_inst", "dur_us",
+                                           "x0", "y0", "x1", "y1"])
 
-    return _per_key_kernel(points, key, schema, clip)
+    return _per_key_np_kernel(points, key, schema, clip, t, (x, y))
 
 
 def at_box_stats(points: DataFrame, x0: float, y0: float,
@@ -580,7 +554,7 @@ def at_box_stats(points: DataFrame, x0: float, y0: float,
         n_per, total = _merge_count_totals(
             pk[order2], pa[order2], pb[order2], inc[order2], inc[order2],
             nk)
-        return {"n_periods": n_per, "n_knots_in": n_in,
+        return {key: keys, "n_periods": n_per, "n_knots_in": n_in,
                 "total_us": total}
 
     return _per_key_np_kernel(points, key, schema, stats, t, (x, y))
@@ -718,25 +692,21 @@ def nearest_approach_pairs(points: DataFrame, pair: str = "pair",
                            x: str = "x", y: str = "y") -> DataFrame:
     """Per pair of tpoints: NAD + NAI (`tpoint_spatialfuncs.c:
     2107-2506` via the temporal distance's turning points)."""
-    from . import spatial
     schema = f"{pair} bigint, nad double, nai_us bigint"
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        pv = pdf[pair].iloc[0]
-        groups = [g for _, g in pdf.groupby(member)]
-        if len(groups) != 2:
-            return pd.DataFrame(columns=[pair, "nad", "nai_us"])
-        tvs = [temporal_from_pdf(
-            g.drop_duplicates(subset=[t]).sort_values(t), t, (x, y))
-            for g in groups]
+    def stats(ta, ac, tb, bc):
+        a = Temporal.sequence(ta, np.column_stack((ac[x], ac[y])),
+                              normalize=False)
+        b = Temporal.sequence(tb, np.column_stack((bc[x], bc[y])),
+                              normalize=False)
         try:
-            nai, nad = spatial.nearest_approach_instant(tvs[0], tvs[1])
+            nai, nad = spatial.nearest_approach_instant(a, b)
         except ValueError:  # no temporal overlap
-            return pd.DataFrame(columns=[pair, "nad", "nai_us"])
-        return pd.DataFrame([{pair: pv, "nad": float(nad),
-                              "nai_us": int(nai)}])
+            return None
+        return float(nad), int(nai)
 
-    return _per_key_kernel(points, pair, schema, stats)
+    return _per_pair_np_kernel(points, pair, member, schema, stats,
+                               t, (x, y))
 
 
 def _wagg_probe_join(points: DataFrame, window_us: int,
@@ -750,9 +720,11 @@ def _wagg_probe_join(points: DataFrame, window_us: int,
     spark = points.sparkSession
     probes_df = F.broadcast(spark.createDataFrame(
         [(int(p),) for p in sorted(set(probes_us))], "p_us bigint"))
-    pts = points.select(
-        key, F.unix_micros(F.col(t).cast("timestamp")).alias("t_us"),
-        F.col(v).alias("_v")).dropDuplicates([key, "t_us"])
+    # duplicate (key, t) knots keep the smallest value, the substrate's
+    # rule; dropDuplicates would keep whichever row arrives first
+    pts = points.groupBy(
+        key, F.unix_micros(F.col(t).cast("timestamp")).alias("t_us")) \
+        .agg(F.min(v).alias("_v"))
     return pts.join(
         probes_df,
         (F.col("t_us") >= F.col("p_us") - F.lit(int(window_us)))
@@ -790,27 +762,26 @@ def period_business_stats(points: DataFrame, windows: list[tuple[int, int]],
     intersection/minus): the key's observation span [min_t, max_t]
     intersected with / minus the half-open windows — exact integer
     microsecond totals and piece counts."""
-    import numpy as np
     from . import timeops
     from .types import Period
     schema = (f"{key} bigint, inter_us bigint, n_inter bigint, "
               "minus_us bigint, n_minus bigint")
     wins = [Period(int(a), int(b), True, False) for a, b in windows]
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf[key].iloc[0]
-        tt = pdf[t].to_numpy().astype("datetime64[us]").astype(np.int64)
-        dom = [Period(int(tt.min()), int(tt.max()), True, True)]
-        inter = timeops.intersection(dom, wins)
-        mins = timeops.minus(dom, wins)
-        return pd.DataFrame([{
-            key: kv,
-            "inter_us": int(sum(p.upper - p.lower for p in inter)),
-            "n_inter": len(inter),
-            "minus_us": int(sum(p.upper - p.lower for p in mins)),
-            "n_minus": len(mins)}])
+    def stats(keys, starts, ends, t_us, cd):
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            dom = [Period(int(t_us[s0]), int(t_us[e0 - 1]), True, True)]
+            inter = timeops.intersection(dom, wins)
+            mins = timeops.minus(dom, wins)
+            rows.append((kv, int(sum(p.upper - p.lower for p in inter)),
+                         len(inter),
+                         int(sum(p.upper - p.lower for p in mins)),
+                         len(mins)))
+        return pd.DataFrame(rows, columns=[key, "inter_us", "n_inter",
+                                           "minus_us", "n_minus"])
 
-    return _per_key_kernel(points, key, schema, stats)
+    return _per_key_np_kernel(points, key, schema, stats, t)
 
 
 def lifted_pair_stats(points: DataFrame, pair: str = "pair",
@@ -820,39 +791,30 @@ def lifted_pair_stats(points: DataFrame, pair: str = "pair",
     (`src/temporal_compops.c`, `tnumber_mathfuncs.c`): a+b and a·b
     sampled at the sync instants (sums), plus the exact microseconds
     where a < b (crossing-split stepwise tbool)."""
-    import numpy as np
     from .aggs import _values_at_many
     from .lifting import lift_comparison, synchronize, tadd, tmult
     from .restrict import at_value
     schema = (f"{pair} bigint, n_sync bigint, sum_add double, "
               "sum_mult double, lt_total_us bigint")
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        pv = pdf[pair].iloc[0]
-        groups = [g for _, g in pdf.groupby(member)]
-        if len(groups) != 2:
-            return pd.DataFrame(columns=[pair, "n_sync", "sum_add",
-                                         "sum_mult", "lt_total_us"])
-        a, b = [temporal_from_pdf(
-            g.drop_duplicates(subset=[t]).sort_values(t), t, (v,))
-            for g in groups]
+    def stats(ta, ac, tb, bc):
+        a = Temporal.sequence(ta, ac[v][:, None], normalize=False)
+        b = Temporal.sequence(tb, bc[v][:, None], normalize=False)
         pieces = synchronize(a, b)
         if not pieces:
-            return pd.DataFrame(columns=[pair, "n_sync", "sum_add",
-                                         "sum_mult", "lt_total_us"])
+            return None
         ts = np.unique(np.concatenate([p[0] for p in pieces]))
         add_v, _ = _values_at_many(tadd(a, b), ts)
         mul_v, _ = _values_at_many(tmult(a, b), ts)
         lt = lift_comparison("lt", a, b)
         hit = at_value(lt, 1.0) if lt is not None else None
         ps = hit.get_time() if hit is not None else []
-        return pd.DataFrame([{
-            pair: pv, "n_sync": len(ts),
-            "sum_add": float(add_v[:, 0].sum()),
-            "sum_mult": float(mul_v[:, 0].sum()),
-            "lt_total_us": int(sum(p.upper - p.lower for p in ps))}])
+        return (len(ts), float(add_v[:, 0].sum()),
+                float(mul_v[:, 0].sum()),
+                int(sum(p.upper - p.lower for p in ps)))
 
-    return _per_key_kernel(points, pair, schema, stats)
+    return _per_pair_np_kernel(points, pair, member, schema, stats,
+                               t, (v,))
 
 
 def ttext_state_stats(points: DataFrame, target: str,
@@ -899,7 +861,7 @@ def ttext_state_stats(points: DataFrame, target: str,
         # boundary trick
         ever = np.maximum.reduceat(
             (codes == tcode).astype(np.int64), starts) > 0
-        return {"n_inst": n_inst, "target_us": target_us,
+        return {key: keys, "n_inst": n_inst, "target_us": target_us,
                 "ever_target": ever}
 
     return _per_key_np_kernel(points, key, schema, stats, t, (v,))
@@ -932,7 +894,7 @@ def traj3d_stats(points: DataFrame, key: str = "key", t: str = "t",
         # the point starts reduces exactly each group's members
         zmin = np.minimum.reduceat(zs, starts)
         zmax = np.maximum.reduceat(zs, starts)
-        return {"length3d": np.where(single, 0.0, length),
+        return {key: keys, "length3d": np.where(single, 0.0, length),
                 "speed_max": np.where(single, 0.0, speed_max),
                 "zmin": zmin, "zmax": zmax}
 
@@ -992,7 +954,8 @@ def azimuth_cumlen_stats(points: DataFrame, at_us: int,
         cumlen = np.where(at_us == hi_t, cum_hi,
                           cum_lo + (cum_hi - cum_lo) * frac)
         mask = in_dom & (den > 0) & (ends - starts > 1)
-        return {"tw_azimuth": tw, "cumlen_at": cumlen, "_mask": mask}
+        return {key: keys[mask], "tw_azimuth": tw[mask],
+                "cumlen_at": cumlen[mask]}
 
     return _per_key_np_kernel(points, key, schema, stats, t, (x, y))
 
@@ -1033,7 +996,6 @@ def timeops_matrix_stats(points: DataFrame, windows: list[tuple[int, int]],
     count + exact µs) and a fixed TIMESTAMPSET (intersection instant
     count, minus piece count) — the operand combos period_business
     does not cover."""
-    import numpy as np
     from . import timeops
     from .types import Period
     schema = (f"{key} bigint, u_ps_us bigint, n_u_ps bigint, "
@@ -1041,21 +1003,18 @@ def timeops_matrix_stats(points: DataFrame, windows: list[tuple[int, int]],
     wins = [Period(int(a), int(b), True, False) for a, b in windows]
     tset = [Period(int(p), int(p), True, True) for p in sorted(instants_us)]
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf[key].iloc[0]
-        tt = pdf[t].to_numpy().astype("datetime64[us]").astype(np.int64)
-        dom = [Period(int(tt.min()), int(tt.max()), True, True)]
-        u = timeops.union(dom, wins)
-        i_ts = timeops.intersection(dom, tset)
-        m_ts = timeops.minus(dom, tset)
-        return pd.DataFrame([{
-            key: kv,
-            "u_ps_us": int(sum(p.upper - p.lower for p in u)),
-            "n_u_ps": len(u),
-            "n_i_ts": len(i_ts),
-            "n_m_ts": len(m_ts)}])
+    def stats(keys, starts, ends, t_us, cd):
+        rows = []
+        for kv, s0, e0 in zip(keys, starts, ends):
+            dom = [Period(int(t_us[s0]), int(t_us[e0 - 1]), True, True)]
+            u = timeops.union(dom, wins)
+            rows.append((kv, int(sum(p.upper - p.lower for p in u)), len(u),
+                         len(timeops.intersection(dom, tset)),
+                         len(timeops.minus(dom, tset))))
+        return pd.DataFrame(rows, columns=[key, "u_ps_us", "n_u_ps",
+                                           "n_i_ts", "n_m_ts"])
 
-    return _per_key_kernel(points, key, schema, stats)
+    return _per_key_np_kernel(points, key, schema, stats, t)
 
 
 def tmath_turning_pairs(points: DataFrame, div_shift: float = 1000.0,
@@ -1228,7 +1187,7 @@ def at_range_stats(points: DataFrame, lo: float, hi: float,
             pk[order], pa[order], pb[order], pai[order], pbi[order], nk)
         on_lo = np.add.reduceat((vs == lo).astype(np.int64), starts) \
             if n else np.zeros(nk, np.int64)
-        return {"n_pieces": n_pieces, "total_us": total,
+        return {key: keys, "n_pieces": n_pieces, "total_us": total,
                 "n_knots_on_lo": on_lo}
 
     return _per_key_np_kernel(points, key, schema, stats, t, (v,))

@@ -74,35 +74,37 @@ def trajectories(pages: DataFrame) -> DataFrame:
     sequence (`create_test_tables_tpoint_big.sql:168-258` params).
     """
     from .pipeline import extract_points
-    pts = extract_points(pages)
+    from .spark_temporal import _per_key_np_kernel, _values
+    base = np.datetime64("2001-06-01T00:00:00", "us").astype(np.int64)
+    step = 3600_000_000
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        url = pdf["url"].iloc[0]
-        pdf = pdf.sort_values("tag_idx")
-        n = len(pdf)
-        coords = pdf[["lon", "lat"]].to_numpy()
-        h = hash(url) % 10
-        base = np.datetime64("2001-06-01T00:00:00", "us").astype(np.int64)
-        step = 3600_000_000
-        times = base + np.arange(n, dtype=np.int64) * step
-        if h < 1 or n == 1:                       # 1/10 Instant
-            tv = Temporal.instant(int(times[0]), coords[0], 4326)
-        elif h < 3:                               # 2/10 InstantSet
-            tv = Temporal.instant_set(times, coords, 4326)
-        elif h < 7:                               # 4/10 Sequence
-            tv = Temporal.sequence(times[:10], coords[:10], srid=4326,
-                                   normalize=False)
-        else:                                     # 3/10 SequenceSet
-            half = max(1, n // 2)
-            s1 = Seq(times[:half], coords[:half])
-            s2 = Seq(times[half:] + step * 100, coords[half:]) \
-                if n - half > 0 else None
-            seqs = [s1] + ([s2] if s2 is not None else [])
-            tv = Temporal.sequence_set(seqs, 4326, normalize=False)
-        return pd.DataFrame([{"key": url, "tpoint": to_row(tv)}])
+    def build(urls, starts, ends, tag_idx, cd):
+        lonlat = _values(cd, ("lon", "lat"))
+        rows = []
+        for url, s0, e0 in zip(urls, starts, ends):
+            coords = lonlat[s0:e0]
+            n = e0 - s0
+            h = hash(url) % 10
+            times = base + np.arange(n, dtype=np.int64) * step
+            if h < 1 or n == 1:                       # 1/10 Instant
+                tv = Temporal.instant(int(times[0]), coords[0], 4326)
+            elif h < 3:                               # 2/10 InstantSet
+                tv = Temporal.instant_set(times, coords, 4326)
+            elif h < 7:                               # 4/10 Sequence
+                tv = Temporal.sequence(times[:10], coords[:10], srid=4326,
+                                       normalize=False)
+            else:                                     # 3/10 SequenceSet
+                half = max(1, n // 2)
+                s1 = Seq(times[:half], coords[:half])
+                s2 = Seq(times[half:] + step * 100, coords[half:]) \
+                    if n - half > 0 else None
+                seqs = [s1] + ([s2] if s2 is not None else [])
+                tv = Temporal.sequence_set(seqs, 4326, normalize=False)
+            rows.append((url, to_row(tv)))
+        return pd.DataFrame(rows, columns=["key", "tpoint"])
 
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(pts, "url", TRAJ_SCHEMA, build)
+    return _per_key_np_kernel(extract_points(pages), "url", TRAJ_SCHEMA,
+                              build, "tag_idx", ("lon", "lat"))
 
 
 # ---------------------------------------------------------------------------

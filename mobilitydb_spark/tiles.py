@@ -107,8 +107,7 @@ def rasterize_tiles(points: DataFrame, lon: str = "lon", lat: str = "lat",
     assembly via a map lookup over the pixel sequence."""
     p = px.bit_length() - 1
     assert 1 << p == px, "px must be a power of two"
-    gx = tile_x_col(F.col(lon), zoom + p)
-    gy = tile_y_col(F.col(lat), zoom + p)
+    gx, gy = (F.expr(e) for e in tile_sql(f"`{lon}`", f"`{lat}`", zoom + p))
     binned = points.select(
         F.shiftright(gx, p).alias("tile_x"),
         F.shiftright(gy, p).alias("tile_y"),
