@@ -237,9 +237,10 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return (f"(CAST({res} AS BIGINT) * {R_SHIFT} + ({x}) * {X_SHIFT} + ({y}))")
 
 
-def grid_disk_sql(cell_expr: str, k_expr: str) -> str:
-    """Spark SQL text: ``grid_disk_np``'s k-ring of a cell as an array
-    of cell ids, with the cell (any resolution) and k per row.
+def grid_disk_sql(cell_expr: str, kx_expr: str, ky_expr: str) -> str:
+    """Spark SQL text: ``grid_rect_np``'s (2kx+1)×(2ky+1) neighbourhood
+    of a cell as an array of cell ids, with the cell (any resolution),
+    kx and ky per row.
 
     Longitude wraps modulo 2^r and latitude clamps to the grid, but no
     cell repeats: the clamped latitude range is shorter at the poles,
@@ -248,11 +249,11 @@ def grid_disk_sql(cell_expr: str, k_expr: str) -> str:
     n = f"shiftleft(1L, {r})"
     x = f"(shiftright({cell_expr}, {X_BITS}) & {X_SHIFT - 1})"
     y = f"({cell_expr} & {X_SHIFT - 1})"
-    xs = (f"IF(2 * {k_expr} + 1 >= {n}, sequence(0L, {n} - 1), "
-          f"transform(sequence({x} - {k_expr}, {x} + {k_expr}), "
+    xs = (f"IF(2 * {kx_expr} + 1 >= {n}, sequence(0L, {n} - 1), "
+          f"transform(sequence({x} - {kx_expr}, {x} + {kx_expr}), "
           f"v -> pmod(v, {n})))")
-    ys = (f"sequence(greatest({y} - {k_expr}, 0L), "
-          f"least({y} + {k_expr}, {n} - 1))")
+    ys = (f"sequence(greatest({y} - {ky_expr}, 0L), "
+          f"least({y} + {ky_expr}, {n} - 1))")
     return (f"flatten(transform({xs}, gx -> transform({ys}, gy -> "
             f"shiftleft(CAST({r} AS BIGINT), {R_BITS}) "
             f"| shiftleft(gx, {X_BITS}) | gy)))")

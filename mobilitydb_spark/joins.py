@@ -24,15 +24,17 @@ R-trees (`point/src/sql/70_tpoint_gist.in.sql`,
 - **dwithin join**: grid_disk ring expansion of the point cell
   (replaces ``a && expand(b, d)``,
   `66_tpoint_spatialrels.in.sql:394-445`) then exact distance refine
-- **kNN join**: bounded ring expansion with a correctness guarantee —
-  queries whose k-th neighbour isn't provably inside the searched
-  rings fall back to a brute pass (`|=|` ordering,
-  `56_tpoint_spatialfuncs.in.sql:186-214`).
+- **kNN join**: exact by construction (`|=|` ordering,
+  `56_tpoint_spatialfuncs.in.sql:186-214`) — the per-cell candidate
+  counts of a resolution ladder ending in the one-cell level 0 give
+  each query a radius that holds its k nearest: the distance to the
+  farthest corner of the finest cell with k+1 candidates.  One ring
+  equi-join and one window, no action; a query joins at most |C|
+  candidate pairs, the cost of a brute pass.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -417,135 +419,108 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
 
 
 # ---------------------------------------------------------------------------
-# kNN join (ring expansion + guaranteed fallback)
+# kNN join (exact radius from the ladder counts)
 # ---------------------------------------------------------------------------
 
+# added to each query's radius: covers the rounding of the cell bounds
+# and of the distances, so the own cell's candidates always pass
+_RAD_PAD = 1e-9
+
+
 def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
-             resolutions: tuple[int, ...] = (16, 14, 12, 10, 8),
-             rings: int = 1, target_cands: int = 64,
-             query_id: str = "q_id", cand_id: str = "c_id",
-             adaptive_factor: float | None = 9.0,
-             brute_pairs_budget: int = 64_000_000) -> DataFrame:
+             resolutions: tuple[int, ...] = (16, 14, 12, 10, 8, 6, 4, 2),
+             query_id: str = "q_id", cand_id: str = "c_id") -> DataFrame:
     """k nearest candidate points per query point (planar degrees):
-    (query_id, cand_id, dist, rank), a query never its own neighbour.
+    (query_id, cand_id, dist, rank), a query never its own neighbour,
+    ties in distance ranked by ``cand_id``.  Candidate ids are unique
+    and coordinates lie on the grid (lon in [-180, 180], lat in
+    [-90, 90]).
 
     **Exactness** (`|=|` must order as the true distance does,
-    `56_tpoint_spatialfuncs.in.sql:186-214`): each query searches a
-    radius ``rad`` over a cell cover that holds every candidate within
-    ``rad``, and keeps only the candidates within ``rad``.  If k of
-    them survive, no excluded candidate can displace one, so its top-k
-    is exact.  A query with fewer than k survivors is re-run: by brute
-    force over all candidates when ``n_bad · |C| <= brute_pairs_budget``,
-    otherwise by a 4× widened-ring retry of the same shape whose
-    remaining failures go to brute force.
+    `56_tpoint_spatialfuncs.in.sql:186-214`): each query takes the
+    finest ladder level ``L`` whose own cell holds at least ``k + 1``
+    candidates, and searches the radius ``rad`` from the query to the
+    farthest corner of that cell.  Those ``k + 1`` candidates all lie
+    within ``rad`` and at most one of them is the query itself, so at
+    least ``k`` others do; every candidate left out is farther than
+    ``rad``, so the top-k within ``rad`` is the exact top-k, ties
+    included.  Level 0 (one cell, the whole grid) ends the ladder, so
+    every query has such a level whenever ``|C| > k``; when ``|C| <= k``
+    every query takes level 0 and gets all candidates.
 
-    **Shape**: one candidate equi-join and one ``row_number`` window.
+    **Shape**: one lazy plan, no action, nothing cached.
 
     1. *Level choice.*  Candidates explode once to their cells at every
-       level of ``resolutions`` (a cell id carries its level, so one
-       table serves all levels, counted in one aggregation).  Each
-       query picks the finest level whose own cell holds
-       ``target_cands`` candidates, else the coarsest; that cell's
-       count is its ``own_n``.
-    2. *Radius.*  The guarantee is ``g = rings · cell_height(level)``.
-       With ``adaptive_factor``, ``rad = min(g, r')`` where ``r'`` is the
-       radius expected to hold ``adaptive_factor · k`` candidates at the
-       own-cell density; the argument above holds at any radius.
-    3. *Cover.*  Each query explodes to the ring of cells one ladder
-       level finer than its own (``cells.grid_disk_sql``, built in
-       Catalyst): ``ceil(rad / cell_height)`` rings, at most
-       ``rings · 2^Δlevel``.  Longitude cells are wider than latitude
-       cells, so the latitude ring count covers both axes.
-    4. *Top-k.*  Pairs within ``rad`` are ranked per query; a query is
-       done when it has a rank-k row.  The failed count is the one
-       action in the call; nothing is cached, so nothing outlives it.
+       level (a cell id carries its level, so one table serves all
+       levels, counted in one aggregation); each query keeps its
+       smallest ladder index whose own cell count is ``>= k + 1``.
+    2. *Cover.*  Each query explodes to the cells one ladder level finer
+       than ``L`` within ``kx = ceil(rad / cell_width)`` columns and
+       ``ky = ceil(rad / cell_height)`` rows of its own
+       (``cells.grid_disk_sql``): every candidate within ``rad``.  A
+       query at level 0 joins the level-0 cell itself, a brute pass.
+    3. *Top-k.*  One candidate equi-join on the cell, the pairs within
+       ``rad``, and one ``row_number`` window per query.
+
+    **Cost**: a candidate sits in one cell per level and the cover
+    holds no cell twice, so a query joins at most ``|C|`` pairs, the
+    cost of a brute pass; a query whose level-``L`` cell is dense joins
+    only the candidates near it.  The default ladder steps two levels
+    at a time: every level is one more exploded row per candidate, and
+    a step-1 ladder measured slower.
     """
     from pyspark.sql import Window
-    lv = sorted(resolutions, reverse=True)
+    lv = sorted(set(resolutions) | {0}, reverse=True)
     last = len(lv) - 1
-
-    def level(i: str) -> str:
-        return f"element_at(array({', '.join(map(str, lv))}), {i} + 1)"
-
-    def height(i: str) -> str:
-        return f"(180D / shiftleft(1L, {level(i)}))"
 
     def level_cells(lon: str, lat: str) -> str:
         return ("array(" + ", ".join(cells.cell_sql(lon, lat, r) for r in lv)
                 + ")")
 
-    def cell_at(i: str) -> str:
-        return f"element_at({level_cells('lon', 'lat')}, {i} + 1)"
-
-    cpts = candidates.selectExpr(cand_id, "lon AS c_lon", "lat AS c_lat")
-    clong = cpts.selectExpr(
-        "*", f"explode({level_cells('c_lon', 'c_lat')}) AS cell")
+    clong = candidates.selectExpr(
+        cand_id, "lon AS c_lon", "lat AS c_lat",
+        f"explode({level_cells('lon', 'lat')}) AS cell")
+    counts = clong.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
     qlong = queries.selectExpr(
         query_id, "lon", "lat",
         f"posexplode({level_cells('lon', 'lat')}) AS (i, cell)")
-    counts = clong.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-    # the finest satisfied level has the smallest i
+    # the finest satisfied level has the smallest i; level 0 takes all
     qpts = (qlong.join(counts, "cell", "left")
-            .where(f"n >= {target_cands} OR i = {last}")
+            .where(f"n > {k} OR i = {last}")
             .groupBy(query_id)
             .agg(F.min("lon").alias("lon"), F.min("lat").alias("lat"),
-                 F.min("i").alias("i"), F.min_by("n", "i").alias("own_n")))
+                 F.min_by("cell", "i").alias("own"), F.min("i").alias("i")))
 
-    g = f"{rings} * {height('i')}"
-    rad = g if adaptive_factor is None else (
-        f"IF(own_n > 0, least({g}, sqrt("
-        f"{2.0 * adaptive_factor * k / math.pi!r} * {height('i')}"
-        f" * {height('i')} / own_n)), {g})")
-    j = "greatest(i - 1, 0)"  # the join level: one ladder level finer
-    main = qpts.selectExpr(query_id, "lon", "lat", "i",
-                           f"{rad} AS rad").selectExpr(
-        query_id, "lon", "lat", "rad", f"{cell_at(j)} AS jc",
-        f"least(greatest(CAST(ceil(rad / {height(j)}) AS INT), 1), "
-        f"{rings} * shiftleft(1, {level(j)} - {level('i')})) AS nr")
+    # rad: to the own cell's farthest corner (x, y index the cell, h is
+    # its height in degrees, its width 2h)
+    h = f"(180D / shiftleft(1L, CAST(shiftright(own, {cells.R_BITS}) AS INT)))"
+    x = f"(shiftright(own, {cells.X_BITS}) & {cells.X_SHIFT - 1})"
+    y = f"(own & {cells.X_SHIFT - 1})"
+    rad = (f"sqrt(pow(greatest(lon + 180D - {x} * 2 * {h}, "
+           f"({x} + 1) * 2 * {h} - lon - 180D), 2) "
+           f"+ pow(greatest(90D - lat - {y} * {h}, "
+           f"({y} + 1) * {h} - 90D + lat), 2)) + {_RAD_PAD!r}")
+    j = f"IF(i = {last}, i, greatest(i - 1, 0)) + 1"  # one ladder level finer
+    ring = qpts.selectExpr(
+        query_id, "lon", "lat", f"{rad} AS rad",
+        f"element_at({level_cells('lon', 'lat')}, {j}) AS jc",
+        f"shiftleft(1L, element_at(array({', '.join(map(str, lv))}), {j}))"
+        " AS nj")
+    ring = ring.selectExpr(
+        query_id, "lon", "lat", "rad", "explode(" + cells.grid_disk_sql(
+            "jc", "least(CAST(ceil(rad * nj / 360D) AS BIGINT), nj)",
+            "least(CAST(ceil(rad * nj / 180D) AS BIGINT), nj)") + ") AS cell")
 
-    w = Window.partitionBy(query_id).orderBy(F.asc("dist"), F.asc(cand_id))
     dist = F.sqrt((F.col("lon") - F.col("c_lon")) ** 2
                   + (F.col("lat") - F.col("c_lat")) ** 2)
-
-    def top_k(pairs: DataFrame) -> DataFrame:
-        return (pairs.where(F.col(query_id) != F.col(cand_id))
-                .select(query_id, cand_id, dist.alias("dist"))
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k))
-
-    def search(q: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(ranked, done): q's (query_id, lon, lat, rad, jc, nr) rows
-        against the candidates within rad, and its queries with k."""
-        pairs = (q.selectExpr(query_id, "lon", "lat", "rad", "explode("
-                              f"{cells.grid_disk_sql('jc', 'nr')}) AS cell")
-                 .join(clong, "cell").where(dist <= F.col("rad")))
-        ranked = top_k(pairs)
-        return ranked, ranked.where(F.col("rank") == k).select(query_id)
-
-    def brute(q: DataFrame) -> DataFrame:
-        return top_k(q.select(query_id, "lon", "lat").crossJoin(cpts))
-
-    ranked, done = search(main)
-    bad = qpts.join(done, query_id, "left_anti")
-    # the one action: the failed queries and |C|, summed in one stage
-    n_bad, n_cands = (
-        bad.select(F.lit(1).alias("b"), F.lit(0).alias("c"))
-        .unionByName(cpts.select(F.lit(0).alias("b"), F.lit(1).alias("c")))
-        .agg(F.sum("b"), F.sum("c")).first())
-    if not n_bad:
-        return ranked
-    good = ranked.join(done, query_id, "left_semi")
-    if n_bad * n_cands <= brute_pairs_budget:
-        return good.unionByName(brute(F.broadcast(bad)))
-
-    # retry each failed query at its own level with 4x the rings; a
-    # single failure must not scan every candidate at scale
-    retry = 4 * rings
-    ranked2, done2 = search(bad.selectExpr(
-        query_id, "lon", "lat", f"{retry} * {height('i')} AS rad",
-        f"{cell_at('i')} AS jc", f"{retry} AS nr"))
-    return (good.unionByName(ranked2.join(done2, query_id, "left_semi"))
-            .unionByName(brute(bad.join(done2, query_id, "left_anti"))))
+    by_dist = Window.partitionBy(query_id).orderBy(F.asc("dist"),
+                                                   F.asc(cand_id))
+    return (ring.join(clong, "cell")
+            .where((dist <= F.col("rad"))
+                   & (F.col(query_id) != F.col(cand_id)))
+            .select(query_id, cand_id, dist.alias("dist"))
+            .withColumn("rank", F.row_number().over(by_dist))
+            .where(F.col("rank") <= k))
 
 
 def interval_join(left: DataFrame, right: DataFrame,

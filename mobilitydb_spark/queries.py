@@ -987,7 +987,7 @@ _ORACLE_DWITHIN = f"""
 
 
 def q_knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Planar kNN join (density-adaptive grid, `joins.knn_join`) for
+    """Planar kNN join (radius from the ladder counts, `joins.knn_join`) for
     query docs (doc_id < 10) vs a window-SQL exact oracle."""
     from . import joins
     docs = _load(spark, sf_dir, "documents")
@@ -996,8 +996,7 @@ def q_knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = pts.where(F.col("doc_id") < 10).select(
         F.col("doc_id").alias("q_id"), "lon", "lat")
     c = pts.select(F.col("doc_id").alias("c_id"), "lon", "lat")
-    out = joins.knn_join(q, c, 3, resolutions=(10, 8, 6), rings=1,
-                         target_cands=16)
+    out = joins.knn_join(q, c, 3, resolutions=(10, 8, 6))
     return (out.select("q_id", "c_id", F.round("dist", 6).alias("d"),
                        F.col("rank").cast("bigint").alias("rank"))
             .orderBy("q_id", "rank"))

@@ -149,8 +149,8 @@ def main() -> None:
         (hx * hx / F.lit(1e12) * 340.0 - 170.0).alias("lon"),
         (F.pmod(F.xxhash64("url", F.lit(7)), F.lit(1_600_000))
          / 10_000.0 - 80.0).alias("lat"))
-    # 1-in-8: kNN-join cost is query-count-bound (each query touches
-    # ~target_cands candidates regardless of corpus size), so the
+    # 1-in-8: kNN-join cost is query-count-bound (each query joins
+    # only the candidates near it, whatever the corpus size), so the
     # query side must scale with the corpus for the pair to measure
     # the join rather than the fixed job floor.  The slice REMAINDER
     # rotates per call, so every rep gets an equal-sized, disjoint,

@@ -18,7 +18,7 @@ def _knn(spark):
                         "lat": rng.uniform(40, 41, 400)})
     c = spark.createDataFrame(pdf)
     q = c.where(F.col("c_id") % 20 == 0).withColumnRenamed("c_id", "q_id")
-    return joins.knn_join(q, c, 5, resolutions=(12, 10, 8), target_cands=8)
+    return joins.knn_join(q, c, 5, resolutions=(12, 10, 8))
 
 
 def _embeddings(spark):

@@ -197,25 +197,37 @@ def test_sql_text_cells_and_tiles_match_column_forms(spark):
 
 def test_grid_disk_sql_matches_numpy_without_duplicates(spark):
     """``cells.grid_disk_sql`` (the kNN join's Catalyst cover) holds
-    the cells of ``grid_disk_np`` per row, for cells of mixed
-    resolutions and ring sizes in one column: longitude wraps at the
-    antimeridian, latitude clamps at the poles, a ring wider than the
-    grid covers each column once, and no cell repeats."""
+    the cells of ``grid_rect_np`` per row, for cells of mixed
+    resolutions and ring sizes kx, ky in one column (``grid_disk_np``
+    where they are equal): longitude wraps at the antimeridian,
+    latitude clamps at the poles, a ring wider than the grid covers
+    each column once, and no cell repeats."""
     import pandas as pd
     rng = np.random.default_rng(5)
     res = rng.integers(1, 17, 300)
     lon = np.r_[rng.uniform(-180, 180, 300),
-                [-179.99, 179.99, 179.99, -179.99, 0.0, 8.0]]
+                [-179.99, 179.99, 179.99, -179.99, 0.0, 8.0,
+                 179.99, -179.99, 0.0, 170.0, -90.0]]
     lat = np.r_[rng.uniform(-90, 90, 300),
-                [89.99, -89.99, 0.0, 10.0, 89.99, -89.99]]
-    res = np.r_[res, [10, 10, 4, 16, 1, 2]]
-    k = np.r_[rng.integers(0, 5, 300), [2, 3, 1, 4, 2, 3]]
+                [89.99, -89.99, 0.0, 10.0, 89.99, -89.99,
+                 89.99, -89.99, 45.0, -89.99, 0.0]]
+    res = np.r_[res, [10, 10, 4, 16, 1, 2, 12, 12, 3, 5, 0]]
+    kx = np.r_[rng.integers(0, 5, 300), [2, 3, 1, 4, 2, 3, 5, 1, 4, 40, 1]]
+    ky = np.r_[kx[:150], rng.integers(0, 9, 150),
+               [2, 3, 1, 4, 2, 3, 1, 6, 1, 3, 1]]
     cell = np.array([cells.cell_np(a, b, int(r))
                      for a, b, r in zip(lon, lat, res)])
-    df = spark.createDataFrame(pd.DataFrame({"cell": cell, "k": k}))
+    df = spark.createDataFrame(pd.DataFrame({"cell": cell, "kx": kx,
+                                             "ky": ky}))
     got = df.selectExpr(
-        "cell", "k", f"{cells.grid_disk_sql('cell', 'k')} AS disk").collect()
+        "cell", "kx", "ky",
+        f"{cells.grid_disk_sql('cell', 'kx', 'ky')} AS disk").collect()
+    assert sum(r.kx != r.ky for r in got) > 100
     for row in got:
-        want = set(cells.grid_disk_np(np.array([row.cell]), row.k)[0])
+        want = set(cells.grid_rect_np(np.array([row.cell]), row.kx,
+                                      row.ky)[0])
+        if row.kx == row.ky:
+            assert want == set(cells.grid_disk_np(np.array([row.cell]),
+                                                  row.kx)[0])
         assert len(row.disk) == len(set(row.disk)), row
         assert set(row.disk) == {int(c) for c in want}, row

@@ -98,8 +98,7 @@ def test_knn_join_matches_bruteforce(spark, pts):
     c = pts.select(F.concat_ws("#", "url", "tag_idx").alias("c_id"),
                    "lon", "lat")
     k = 5
-    got = joins.knn_join(q, c, k, resolutions=(12, 10, 8),
-                         rings=1, target_cands=8).toPandas()
+    got = joins.knn_join(q, c, k, resolutions=(12, 10, 8)).toPandas()
     qpdf = q.toPandas()
     cpdf = c.toPandas()
     for _, qrow in qpdf.iterrows():
@@ -113,29 +112,22 @@ def test_knn_join_matches_bruteforce(spark, pts):
         assert got_ids == want_ids, qrow["q_id"]
 
 
-def test_knn_widened_ring_retry_and_brute(spark):
-    """Outlier queries: one whose kNN lies within the 4x widened retry
-    radius (retry pass), one whose kNN is beyond it (brute pass) —
-    both must still return the exact brute-force answer."""
-    import pandas as pd
+def test_knn_outlier_queries_match_brute(spark):
+    """Outlier queries 1.5° and 15° from a 0.2° cluster, far outside
+    every ladder cell that holds their neighbours, return the exact
+    brute-force answer."""
     rng = np.random.default_rng(3)
     cl_lon = 10.0 + rng.uniform(0, 0.2, 60)
     cl_lat = 50.0 + rng.uniform(0, 0.2, 60)
     cpdf = pd.DataFrame({"c_id": [f"c{i}" for i in range(60)],
                          "lon": cl_lon, "lat": cl_lat})
     qpdf = pd.DataFrame({
-        "q_id": ["near_retry", "far_brute"],
-        # ~1.5 deg away: outside 1 ring at res 8 (0.70 deg) but inside
-        # the 4-ring retry radius (2.8 deg); ~15 deg away: beyond both
+        "q_id": ["near", "far"],
         "lon": [10.1 + 1.5, 10.1 + 15.0],
         "lat": [50.1, 50.1]})
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    # budget 0 forces the widened-ring retry + brute machinery (the
-    # tiny-remainder shortcut would otherwise own every toy-|C| case)
-    got = joins.knn_join(q, c, 3, resolutions=(12, 10, 8),
-                         rings=1, target_cands=8,
-                         brute_pairs_budget=0).toPandas()
+    got = joins.knn_join(q, c, 3, resolutions=(12, 10, 8)).toPandas()
     for _, qrow in qpdf.iterrows():
         d = np.sqrt((cpdf["lon"] - qrow["lon"]) ** 2
                     + (cpdf["lat"] - qrow["lat"]) ** 2)
@@ -145,12 +137,10 @@ def test_knn_widened_ring_retry_and_brute(spark):
         assert got_ids == want, qrow["q_id"]
 
 
-def test_knn_tiny_remainder_brute_shortcut(spark):
-    """Under-guaranteed queries with n_bad * |C| inside the pair
-    budget take ONE broadcast brute map-stage instead of the ~15-stage
-    ring retry (measured 14.6 s -> 4 s at sf0.01 bench scale for a
-    single failed query) — results must equal brute force exactly."""
-    import pandas as pd
+def test_knn_queries_beside_a_cluster_match_brute(spark):
+    """Queries inside, 1.5° beside and 15° away from a small cluster
+    (the far ones search the whole grid at level 0) equal brute
+    force."""
     rng = np.random.default_rng(3)
     cpdf = pd.DataFrame({"c_id": [f"c{i}" for i in range(60)],
                          "lon": 10.0 + rng.uniform(0, 0.2, 60),
@@ -160,8 +150,7 @@ def test_knn_tiny_remainder_brute_shortcut(spark):
                          "lat": [50.1, 50.1, 50.1]})
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    got = joins.knn_join(q, c, 3, resolutions=(12, 10, 8),
-                         rings=1, target_cands=8).toPandas()
+    got = joins.knn_join(q, c, 3, resolutions=(12, 10, 8)).toPandas()
     for _, qrow in qpdf.iterrows():
         d = np.sqrt((cpdf["lon"] - qrow["lon"]) ** 2
                     + (cpdf["lat"] - qrow["lat"]) ** 2)
@@ -287,57 +276,40 @@ def test_interval_join_bimodal_auto_bucket(spark):
     assert (nb <= 64).all()  # nothing takes the broadcast NL pass
 
 
-def test_knn_adaptive_radius_output_identical(spark):
-    """The density-adaptive filter radius (adaptive_factor) must be
-    output-identical to the plain guarantee-radius path on a skewed
-    corpus: a dense cluster (where r' << g genuinely tightens the
-    filter) plus a sparse tail (coarsest-level fallback keeps g).
-    Exactness argument in joins.knn_join's docstring: found >= k
-    within ANY radius proves the top-k, failures retry."""
-    rng = np.random.default_rng(11)
-    dense_lon = 10.0 + rng.uniform(0, 0.1, 600)
-    dense_lat = 50.0 + rng.uniform(0, 0.1, 600)
-    sparse_lon = rng.uniform(-60, 60, 200)
-    sparse_lat = rng.uniform(-40, 40, 200)
-    cpdf = pd.DataFrame({
-        "c_id": [f"c{i}" for i in range(800)],
-        "lon": np.concatenate([dense_lon, sparse_lon]),
-        "lat": np.concatenate([dense_lat, sparse_lat])})
-    qpdf = cpdf.iloc[::17].rename(columns={"c_id": "q_id"}).copy()
-    q = spark.createDataFrame(qpdf)
-    c = spark.createDataFrame(cpdf)
-    kwargs = dict(resolutions=(12, 10, 8), rings=1, target_cands=8)
-    got_ad = (joins.knn_join(q, c, 4, adaptive_factor=9.0, **kwargs)
-              .toPandas().sort_values(["q_id", "rank"])
-              .reset_index(drop=True))
-    got_g = (joins.knn_join(q, c, 4, adaptive_factor=None, **kwargs)
-             .toPandas().sort_values(["q_id", "rank"])
-             .reset_index(drop=True))
-    assert len(got_ad) and len(got_ad) == len(got_g)
-    pd.testing.assert_frame_equal(got_ad, got_g, check_like=True)
-    # non-vacuity: a dense-cluster query's own-cell population at the
-    # chosen level must exceed factor*k, otherwise r' never < g and
-    # this test pins nothing
-    assert (qpdf["lon"] < 11).sum() > 0
-
-
 def _assert_knn_is_brute(got, qpdf, cpdf, k):
-    """Each query's ranked distances equal numpy brute force over every
-    candidate but itself: min(k, |C| - self) rows, ranks 1..n."""
+    """Each query's ranked neighbours equal numpy brute force over every
+    candidate but itself, ordered by (distance, c_id): min(k, |C| -
+    self) rows, ranks 1..n."""
     cx, cy = cpdf["lon"].to_numpy(), cpdf["lat"].to_numpy()
+    cid = cpdf["c_id"].to_numpy()
     for _, qrow in qpdf.iterrows():
         d = np.sqrt((cx - qrow["lon"]) ** 2 + (cy - qrow["lat"]) ** 2)
-        want = np.sort(d[cpdf["c_id"].to_numpy() != qrow["q_id"]])[:k]
+        other = cid != qrow["q_id"]
+        order = np.lexsort((cid[other], d[other]))[:k]
         mine = got[got["q_id"] == qrow["q_id"]].sort_values("rank")
-        assert mine["rank"].tolist() == list(range(1, len(want) + 1)), \
+        assert mine["rank"].tolist() == list(range(1, len(order) + 1)), \
             qrow["q_id"]
-        np.testing.assert_allclose(mine["dist"].to_numpy(), want,
+        assert mine["c_id"].tolist() == cid[other][order].tolist(), \
+            qrow["q_id"]
+        np.testing.assert_allclose(mine["dist"].to_numpy(), d[other][order],
                                    rtol=0, atol=1e-12, err_msg=qrow["q_id"])
+
+
+def _knn_level(lon, lat, cpdf, levels, k):
+    """The ladder level ``knn_join`` searches a query at: the finest of
+    ``levels`` + (0,) whose own cell holds more than k candidates, else
+    0."""
+    import mobilitydb_spark.cells as C
+    for r in (*levels, 0):
+        own = C.cell_np(np.array([lon]), np.array([lat]), r)
+        if (C.cell_np(cpdf["lon"], cpdf["lat"], r) == own).sum() > k:
+            return r
+    return 0
 
 
 def _skewed_corpus(seed):
     """A dense 0.1° cluster (fine levels) and a sparse tail (coarse
-    levels and brute-force remainders)."""
+    levels and level 0)."""
     rng = np.random.default_rng(seed)
     return pd.DataFrame({
         "c_id": [f"c{i}" for i in range(800)],
@@ -347,36 +319,44 @@ def _skewed_corpus(seed):
                      rng.uniform(-40, 40, 200)]})
 
 
+def test_knn_skewed_corpus_matches_brute(spark):
+    """Queries drawn from a dense cluster plus a sparse tail, where the
+    dense ones search small fine cells and the tail coarse ones, equal
+    brute force."""
+    cpdf = _skewed_corpus(11)
+    qpdf = cpdf.iloc[::17].rename(columns={"c_id": "q_id"}).copy()
+    q = spark.createDataFrame(qpdf)
+    c = spark.createDataFrame(cpdf)
+    got = joins.knn_join(q, c, 4, resolutions=(12, 10, 8)).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 4)
+    # non-vacuity: dense queries search the finest level, tail ones
+    # coarser levels
+    chosen = {_knn_level(x, y, cpdf, (12, 10, 8), 4)
+              for x, y in zip(qpdf["lon"], qpdf["lat"])}
+    assert 12 in chosen and len(chosen) >= 2, chosen
+
+
 def test_knn_mixed_levels_in_one_join_match_brute(spark):
     """Queries whose ladder picks different levels share the one
-    candidate join; every level's answer equals brute force, with the
-    default brute remainder and with the ring retry (budget 0)."""
-    import mobilitydb_spark.cells as C
+    candidate join; every level's answer equals brute force."""
     cpdf = _skewed_corpus(23)
     qpdf = cpdf.iloc[::13].rename(columns={"c_id": "q_id"}).copy()
     levels = (12, 10, 8)
     # non-vacuity: the ladder's choice, recomputed in numpy, differs
-    chosen = set()
-    for lon, lat in zip(qpdf["lon"], qpdf["lat"]):
-        own = [r for r in levels
-               if (C.cell_np(cpdf["lon"], cpdf["lat"], r)
-                   == C.cell_np(np.array([lon]), np.array([lat]), r)).sum()
-               >= 8]
-        chosen.add(own[0] if own else levels[-1])
+    chosen = {_knn_level(x, y, cpdf, levels, 3)
+              for x, y in zip(qpdf["lon"], qpdf["lat"])}
     assert len(chosen) >= 2, chosen
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    for budget in (64_000_000, 0):
-        got = joins.knn_join(q, c, 3, resolutions=levels, rings=1,
-                             target_cands=8,
-                             brute_pairs_budget=budget).toPandas()
-        _assert_knn_is_brute(got, qpdf, cpdf, 3)
+    got = joins.knn_join(q, c, 3, resolutions=levels).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 3)
 
 
 def test_knn_antimeridian_and_poles_match_brute(spark):
     """Queries within one disk of the antimeridian (the cover wraps in
-    longitude) and of both poles (the cover clamps in latitude), on
-    the main pass and on the retry, equal brute force."""
+    longitude) and of both poles (the cover clamps in latitude),
+    including two ~0.45° from a cluster that search a coarser cell,
+    equal brute force with no pair twice."""
     rng = np.random.default_rng(7)
     centres = [(179.98, 0.0), (-179.98, 10.0), (0.0, 89.98),
                (120.0, -89.98), (179.98, 89.98)]
@@ -386,33 +366,189 @@ def test_knn_antimeridian_and_poles_match_brute(spark):
                                   -90.0, 90.0) for _, y in centres])
     cpdf = pd.DataFrame({"c_id": [f"c{i}" for i in range(len(lon))],
                          "lon": lon, "lat": lat})
-    # two queries ~0.45° from a cluster: beyond the main pass's radius
-    # at level 10, inside the retry's 4 rings, which wrap and clamp
     qpdf = pd.concat([
         cpdf.iloc[::5].rename(columns={"c_id": "q_id"}),
         pd.DataFrame({"q_id": ["wrap", "pole"], "lon": [179.5, 0.0],
                       "lat": [0.0, 89.5]})], ignore_index=True)
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    for budget in (64_000_000, 0):
-        got = joins.knn_join(q, c, 4, resolutions=(14, 12, 10), rings=1,
-                             target_cands=8,
-                             brute_pairs_budget=budget).toPandas()
-        assert not got.duplicated(["q_id", "c_id"]).any()
-        _assert_knn_is_brute(got, qpdf, cpdf, 4)
+    got = joins.knn_join(q, c, 4, resolutions=(14, 12, 10)).toPandas()
+    assert not got.duplicated(["q_id", "c_id"]).any()
+    _assert_knn_is_brute(got, qpdf, cpdf, 4)
 
 
 def test_knn_k_above_in_radius_counts_match_brute(spark):
-    """k larger than many queries' in-radius counts: the failures go
-    through the ring retry and then brute force (budget 0) and still
-    equal brute force."""
+    """k larger than many queries' fine-cell counts: those queries
+    search coarser cells or the whole grid and still equal brute
+    force."""
     cpdf = _skewed_corpus(31)
     qpdf = cpdf.iloc[::9].rename(columns={"c_id": "q_id"}).copy()
     q = spark.createDataFrame(qpdf)
     c = spark.createDataFrame(cpdf)
-    got = joins.knn_join(q, c, 12, resolutions=(12, 10, 8), rings=1,
-                         target_cands=8, brute_pairs_budget=0).toPandas()
+    got = joins.knn_join(q, c, 12, resolutions=(12, 10, 8)).toPandas()
     _assert_knn_is_brute(got, qpdf, cpdf, 12)
+
+
+def test_knn_no_more_candidates_than_k(spark):
+    """|C| <= k: every query gets every candidate but itself, ranked."""
+    cpdf = pd.DataFrame({"c_id": ["a", "b", "c"],
+                         "lon": [10.0, 10.5, -120.0],
+                         "lat": [50.0, 50.2, -30.0]})
+    qpdf = pd.DataFrame({"q_id": ["a", "q1", "q2"],
+                         "lon": [10.0, 10.2, 170.0],
+                         "lat": [50.0, 50.1, 80.0]})
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 3).toPandas()
+    assert len(got) == 2 + 3 + 3
+    _assert_knn_is_brute(got, qpdf, cpdf, 3)
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 5).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 5)
+
+
+def test_knn_isolated_query_searches_the_whole_grid(spark):
+    """A query whose every ladder cell holds at most k candidates is
+    served by level 0 only; its neighbours are in another hemisphere."""
+    rng = np.random.default_rng(17)
+    cpdf = pd.DataFrame({"c_id": [f"c{i}" for i in range(120)],
+                         "lon": np.r_[-70.0 + rng.uniform(0, 0.3, 100),
+                                      rng.uniform(100, 170, 20)],
+                         "lat": np.r_[-20.0 + rng.uniform(0, 0.3, 100),
+                                      rng.uniform(-80, -40, 20)]})
+    qpdf = pd.DataFrame({"q_id": ["alone", "in_cluster"],
+                         "lon": [20.0, -69.9], "lat": [70.0, -19.9]})
+    levels = (12, 10, 8)
+    assert _knn_level(20.0, 70.0, cpdf, levels, 4) == 0
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 4,
+                         resolutions=levels).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 4)
+
+
+def test_knn_query_at_the_edge_of_a_cluster_filling_its_cell(spark):
+    """A dense cluster fills one level-8 cell; queries sit on the
+    cell's edge and at its corners, where the whole cell lies to one
+    side and the nearest candidates lie across the cell border.  The radius is
+    the distance to the own cell's far corner, so they equal brute
+    force."""
+    import mobilitydb_spark.cells as C
+    rng = np.random.default_rng(29)
+    # level-8 cell: 1.40625° x 0.703125°, here [0, 1.40625) x (45, 45.70]
+    w, h = 360.0 / 256, 180.0 / 256
+    cx0, cy1 = 0.0, 90.0 - 63 * h
+    # the cluster fills the cell's inner level-10 cells, so the edge
+    # queries' own level-10 cells are empty and they search level 8
+    fill = pd.DataFrame({"lon": cx0 + rng.uniform(w / 4, 3 * w / 4, 400),
+                         "lat": cy1 - rng.uniform(h / 4, 3 * h / 4, 400)})
+    # a thin ring just outside the cell, closer to the edge queries
+    # than most of the cluster
+    out = pd.DataFrame({"lon": np.r_[cx0 - 0.002 * np.ones(6),
+                                     cx0 + w + 0.002 * np.ones(6)],
+                        "lat": np.r_[cy1 - h / 2 + 0.01 * np.arange(6),
+                                     cy1 - 0.001 - 0.01 * np.arange(6)]})
+    cpdf = pd.concat([fill, out], ignore_index=True)
+    cpdf.insert(0, "c_id", [f"c{i}" for i in range(len(cpdf))])
+    qpdf = pd.DataFrame({
+        "q_id": ["west_edge", "ne_corner", "sw_corner"],
+        "lon": [cx0 + 1e-4, cx0 + w - 1e-4, cx0 + 1e-4],
+        "lat": [cy1 - h / 2 + 0.025, cy1 - 1e-4, cy1 - h + 1e-4]})
+    k = 5
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), k,
+                         resolutions=(12, 10, 8)).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, k)
+    # non-vacuity: the queries search the filled level-8 cell, and some
+    # true neighbours lie outside it
+    own = C.cell_np(qpdf["lon"], qpdf["lat"], 8)
+    assert {_knn_level(x, y, cpdf, (12, 10, 8), k)
+            for x, y in zip(qpdf["lon"], qpdf["lat"])} == {8}
+    assert len(set(own)) == 1
+    outside = got["c_id"].isin(cpdf["c_id"][len(fill):])
+    assert outside.sum() >= 3
+
+
+def test_knn_ring_spans_the_radius_on_each_axis(spark):
+    """The own level-8 cell's k+1 candidates sit at its far east edge;
+    two nearer ones lie 1.6 cell heights north and 1.3° west, beyond
+    the cell.  The ring one level finer must reach them on each axis:
+    half the rows or half the columns misses one."""
+    w, h = 360.0 / 256, 180.0 / 256
+    x0, y0 = 140 * w - 180.0, 90.0 - 61 * h  # the cell's south-west corner
+    cpdf = pd.DataFrame({
+        "c_id": ["e0", "e1", "e2", "e3", "north", "west"],
+        "lon": [x0 + w - 0.001 - 0.0005 * i for i in range(4)]
+               + [x0 + 0.001, x0 - 1.3],
+        "lat": [y0 + 0.001] * 4 + [y0 + 1.6 * h, y0 + 0.001]})
+    qpdf = pd.DataFrame({"q_id": ["sw"], "lon": [x0 + 0.001],
+                         "lat": [y0 + 0.001]})
+    assert _knn_level(x0 + 0.001, y0 + 0.001, cpdf, (12, 10, 8), 3) == 8
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 3,
+                         resolutions=(12, 10, 8)).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 3)
+    assert got.sort_values("rank")["c_id"].tolist()[:2] == ["north", "west"]
+
+
+def test_knn_duplicate_coordinates_rank_by_candidate_id(spark):
+    """Candidates stacked on one point tie in distance; the k-th rank
+    goes to the smallest c_id among them, as brute force orders."""
+    ids = np.array([17, 3, 42, 8, 25, 11, 30, 5])
+    cpdf = pd.DataFrame({"c_id": np.r_[ids, [100, 101]],
+                         "lon": np.r_[np.full(8, 5.001), [5.0005, 9.0]],
+                         "lat": np.r_[np.full(8, 40.0), [40.0, 41.0]]})
+    qpdf = pd.DataFrame({"q_id": [-1, -2, 3], "lon": [5.0, 5.002, 5.001],
+                         "lat": [40.0, 40.0, 40.0]})
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 4).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 4)
+    first = got[got["q_id"] == -1].sort_values("rank")["c_id"].tolist()
+    assert first == [100, 3, 5, 8]
+
+
+def test_knn_query_ids_shared_with_candidate_ids(spark):
+    """A query is its own neighbour only by id: a candidate with the
+    query's id is left out wherever it lies, and other queries still
+    see it."""
+    rng = np.random.default_rng(41)
+    cpdf = pd.DataFrame({"c_id": np.arange(50),
+                         "lon": 30.0 + rng.uniform(0, 0.05, 50),
+                         "lat": 10.0 + rng.uniform(0, 0.05, 50)})
+    # query 7 sits on candidate 7's point; query 12 on candidate 0's
+    # point, so its nearest other-id candidate is 0 itself
+    qpdf = pd.DataFrame({
+        "q_id": [7, 12, 0],
+        "lon": [cpdf["lon"][7], cpdf["lon"][0], cpdf["lon"][12]],
+        "lat": [cpdf["lat"][7], cpdf["lat"][0], cpdf["lat"][12]]})
+    got = joins.knn_join(spark.createDataFrame(qpdf),
+                         spark.createDataFrame(cpdf), 3).toPandas()
+    _assert_knn_is_brute(got, qpdf, cpdf, 3)
+    assert 7 not in got[got["q_id"] == 7]["c_id"].tolist()
+    assert got[(got["q_id"] == 12) & (got["rank"] == 1)]["c_id"].item() == 0
+
+
+def test_knn_join_is_lazy_with_one_window(spark):
+    """Calling knn_join starts no Spark job; its executed plan has one
+    Window and no nested-loop or cartesian join."""
+    cpdf = _skewed_corpus(5)
+    qpdf = cpdf.iloc[::20].rename(columns={"c_id": "q_id"}).copy()
+    q, c = spark.createDataFrame(qpdf), spark.createDataFrame(cpdf)
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-lazy", "knn_join laziness")
+    try:
+        out = joins.knn_join(q, c, 3, resolutions=(12, 10, 8))
+        assert list(sc.statusTracker().getJobIdsForGroup("knn-lazy")) == []
+        got = out.toPandas()
+        assert sc.statusTracker().getJobIdsForGroup("knn-lazy")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _assert_knn_is_brute(got, qpdf, cpdf, 3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    nodes = [ln.lstrip(" :+-") for ln in plan.splitlines()]
+    assert sum(n.startswith("Window ") for n in nodes) == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_pip_joins_agree_on_boundary_points(spark):

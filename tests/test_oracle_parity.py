@@ -51,7 +51,14 @@ NONEMPTY = {"geog_dwithin_join", "cosine_dedup", "cosine_neardup_lsh",
 @pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
+    # no cached block may outlive the query (as test_cache_release)
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = jsc.getPersistentRDDs().size()
     sdf = q(spark, SF_DIR).toPandas()
+    assert jsc.getPersistentRDDs().size() == before, f"{name}: leaked RDDs"
+    assert cache.isEmpty(), f"{name}: leaked CacheManager entries"
     odf = duck.sql(entry_mod.oracle_sql()[name]).df()
     if name in NONEMPTY:
         assert len(sdf) > 0, f"{name}: vacuous (0-row) parity"
