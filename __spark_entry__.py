@@ -49,5 +49,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     from mobilitydb_spark.queries import registry
-    return {name: sql for name, (_fn, sql) in registry().items()
-            if sql is not None}
+    return {name: sql for name, (_fn, sql) in registry().items()}

@@ -16,6 +16,7 @@ value-hash compare is exact:
 
 from __future__ import annotations
 
+from functools import cache
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -318,23 +319,6 @@ _ORACLE_KNN = """
 
 
 # --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
-    return {
-        "tpch_q1": (q_tpch_q1, _ORACLE_Q1),
-        "top_customers": (q_top_customers, _ORACLE_TOP_CUST),
-        "events_hourly": (q_events_hourly, _ORACLE_EVENTS_HOURLY),
-        "geo_cells_tiles": (q_geo_cells_tiles, _oracle_cells_tiles()),
-        "pip_grid_join": (q_pip_grid_join, _oracle_pip_grid()),
-        "dedup_exact": (q_dedup_exact, _ORACLE_DEDUP),
-        "doc_stats": (q_doc_stats, _ORACLE_DOC_STATS),
-        "knn_cosine_brute": (q_knn_cosine_brute, _ORACLE_KNN),
-    }
-
-
-# --------------------------------------------------------------------------
 # temporal operators over `events` trajectories (kernel vs SQL oracle)
 # --------------------------------------------------------------------------
 # deterministic long-form points: one instant per (user, ts), coords
@@ -515,23 +499,6 @@ _ORACLE_EXTENT = f"""
 """
 
 
-_EXTRA = {
-    "traj_metrics": (q_traj_metrics, _ORACLE_TRAJ_METRICS),
-    "value_at_timestamp": (q_value_at_timestamp, _ORACLE_VALUE_AT),
-    "twavg": (q_twavg, _ORACLE_TWAVG),
-    "traj_extent": (q_traj_extent, _ORACLE_EXTENT),
-}
-
-
-_BASE_REGISTRY = registry
-
-
-def registry():  # noqa: F811 — extend the base registry
-    out = _BASE_REGISTRY()
-    out.update(_EXTRA)
-    return out
-
-
 # --------------------------------------------------------------------------
 # datagen operators over `documents` / `embeddings`
 # --------------------------------------------------------------------------
@@ -696,6 +663,7 @@ def _lsh_sig_sql(vec_expr: str, planes) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@cache  # formats every LSH plane float; registry() calls this each time
 def _oracle_ann_lsh(k: int = 5) -> str:
     planes = _lsh_planes()
     sig = _lsh_sig_sql("ve", planes)
@@ -738,24 +706,6 @@ def _oracle_ann_lsh(k: int = 5) -> str:
     SELECT qid, cid, score, rank FROM branked WHERE rank <= {k}
     ORDER BY qid, rank
     """
-
-
-_EXTRA2 = {
-    "minhash_dedup": (q_minhash_dedup, _ORACLE_MINHASH),
-    "langid": (q_langid, _oracle_langid()),
-    "doc_quality": (q_doc_quality, _ORACLE_DOC_QUALITY),
-    "fingerprint_md5": (q_fingerprint_md5, _ORACLE_FP),
-    "simhash_pairs": (q_simhash_pairs, _simhash_oracle()),
-    "ann_lsh_topk": (q_ann_lsh_topk, _oracle_ann_lsh()),
-}
-
-_BASE_REGISTRY2 = registry
-
-
-def registry():  # noqa: F811 — extend again
-    out = _BASE_REGISTRY2()
-    out.update(_EXTRA2)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -849,21 +799,6 @@ def q_pip_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "poly_id").orderBy("doc_id", "poly_id")
 
 
-_EXTRA3 = {
-    "traj_ever_in_box": (q_traj_ever_in_box, _ORACLE_EVER_IN_BOX),
-    "mercator_transform": (q_mercator_transform, _ORACLE_MERCATOR),
-    "pip_shuffle_join": (q_pip_shuffle_join, _oracle_pip_grid()),
-}
-
-_BASE_REGISTRY3 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY3()
-    out.update(_EXTRA3)
-    return out
-
-
 def q_tagg_tcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal COUNT aggregate over discrete per-user instant sets
     (`temporal_aggfuncs.c:1739` tcount): the value at each instant is
@@ -915,19 +850,6 @@ _ORACLE_TAGG_TCOUNT_SEQ = f"""
      AND CAST(epoch_us(d.t1) AS BIGINT) >= b.t_us
     GROUP BY b.t_us ORDER BY t_us
 """
-
-_EXTRA4 = {
-    "tagg_tcount": (q_tagg_tcount, _ORACLE_TAGG_TCOUNT),
-    "tagg_tcount_seq": (q_tagg_tcount_seq, _ORACLE_TAGG_TCOUNT_SEQ),
-}
-
-_BASE_REGISTRY4 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY4()
-    out.update(_EXTRA4)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -1020,20 +942,6 @@ _ORACLE_KNN_PTS = f"""
     FROM ranked WHERE rank <= 3 ORDER BY q_id, rank
 """
 
-_EXTRA5 = {
-    "tile_pyramid": (q_tile_pyramid, _oracle_pyramid()),
-    "dwithin_join": (q_dwithin_join, _ORACLE_DWITHIN),
-    "knn_points": (q_knn_points, _ORACLE_KNN_PTS),
-}
-
-_BASE_REGISTRY5 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY5()
-    out.update(_EXTRA5)
-    return out
-
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization of the events stream (30-min inactivity gap):
@@ -1093,13 +1001,6 @@ _ORACLE_SESSIONIZE = """
            ROUND(MAX(span_sec), 3) AS max_span_sec
     FROM per_sess GROUP BY user_id ORDER BY user_id
 """
-
-_EXTRA6 = {
-    "sessionize": (q_sessionize, _ORACLE_SESSIONIZE),
-    # the same join as pip_grid_join; the key stays so the registry
-    # order holds
-    "pip_jvm_join": (q_pip_grid_join, _oracle_pip_grid()),
-}
 
 
 # --------------------------------------------------------------------------
@@ -2140,43 +2041,6 @@ def _oracle_tile_raster() -> str:
     """
 
 
-_EXTRA7 = {
-    "tile_raster": (q_tile_raster, _oracle_tile_raster()),
-    "rolling_fp": (q_rolling_fp, _ORACLE_ROLLING_FP),
-    "ann_ivf_topk": (q_ann_ivf_topk, _oracle_ann_ivf()),
-    "wsum_probe": (q_wsum_probe, _ORACLE_WSUM),
-    "tcentroid_profile": (q_tcentroid_profile, _ORACLE_TCENTROID),
-    "azimuth_cumlen": (q_azimuth_cumlen, _ORACLE_AZ_CUMLEN),
-    "ttext_states": (q_ttext_states, _ORACLE_TTEXT_STATES),
-    "traj3d_metrics": (q_traj3d_metrics, _ORACLE_TRAJ3D),
-    "geog_dwithin_join": (q_geog_dwithin, _oracle_geog_dwithin()),
-    "at_period_clip": (q_at_period_clip, _ORACLE_AT_PERIOD),
-    "period_business": (q_period_business, _ORACLE_PERIOD_BUSINESS),
-    "wcount_probe": (q_wcount_probe, _ORACLE_WCOUNT),
-    "tagg_profile": (q_tagg_profile, _ORACLE_TAGG_PROFILE),
-    "at_box": (q_at_box, _oracle_at_box()),
-    "tdwithin_pairs": (q_tdwithin_pairs, _oracle_tdwithin()),
-    "nad_pairs": (q_nad_pairs, _oracle_nad()),
-    "lifted_pairs": (q_lifted_pairs, _oracle_lifted()),
-}
-
-_BASE_REGISTRY7 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY7()
-    out.update(_EXTRA7)
-    return out
-
-_BASE_REGISTRY6 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY6()
-    out.update(_EXTRA6)
-    return out
-
-
 # --------------------------------------------------------------------------
 # batch 8 (round 3): oracles for the remaining pytest-only families —
 # tand/tor aggregation, position/bbox ops, relate/relate_pattern,
@@ -2503,23 +2367,6 @@ def _oracle_tmath_turning() -> str:
 """
 
 
-_EXTRA8 = {
-    "tbool_tand_tor": (q_tbool_tand_tor, _ORACLE_TBOOL),
-    "posops_boxes": (q_posops_boxes, _oracle_posops()),
-    "relate_rect": (q_relate_rect, _oracle_relate_rect()),
-    "timeops_matrix": (q_timeops_matrix, _oracle_timeops_matrix()),
-    "tmath_turning": (q_tmath_turning, _oracle_tmath_turning()),
-}
-
-_BASE_REGISTRY8 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8()
-    out.update(_EXTRA8)
-    return out
-
-
 # --------------------------------------------------------------------------
 # batch 8b: accessors/constructors + casts + IO roundtrips (§2.7 tail)
 # --------------------------------------------------------------------------
@@ -2617,19 +2464,6 @@ _ORACLE_CASTS = f"""
            TRUE AS roundtrip_ok
     FROM pts GROUP BY key ORDER BY key
 """
-
-_EXTRA8B = {
-    "traj_accessors": (q_traj_accessors, _ORACLE_ACCESSORS),
-    "casts_tbox": (q_casts_tbox, _ORACLE_CASTS),
-}
-
-_BASE_REGISTRY8B = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8B()
-    out.update(_EXTRA8B)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2738,19 +2572,6 @@ def _oracle_at_range() -> str:
 """
 
 
-_EXTRA8C = {
-    "at_range_clip": (q_at_range_clip, _oracle_at_range()),
-}
-
-_BASE_REGISTRY8C = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8C()
-    out.update(_EXTRA8C)
-    return out
-
-
 # --------------------------------------------------------------------------
 # batch 8d: embedding-cosine near-dup pairs (dedup family completion)
 # --------------------------------------------------------------------------
@@ -2791,6 +2612,7 @@ def q_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("id_i", "id_j")
 
 
+@cache  # formats every LSH plane float; registry() calls this each time
 def _oracle_cosine_lsh(n_planes: int = 16, max_hamming: int = 3,
                        max_bucket: int = 20000) -> str:
     """Replicates the FULL engine candidate rule, including the
@@ -2827,20 +2649,6 @@ def _oracle_cosine_lsh(n_planes: int = 16, max_hamming: int = 3,
     WHERE ROUND(list_dot_product(ea.v, eb.v), 6) >= {_COS_TAU}
     ORDER BY id_i, id_j
 """
-
-
-_EXTRA8D = {
-    "cosine_dedup": (q_cosine_dedup, _ORACLE_COSINE_BRUTE),
-    "cosine_neardup_lsh": (q_cosine_neardup_lsh, _oracle_cosine_lsh()),
-}
-
-_BASE_REGISTRY8D = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8D()
-    out.update(_EXTRA8D)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2885,18 +2693,6 @@ _ORACLE_INTERVAL_JOIN = f"""
     FROM l JOIN r ON GREATEST(l.t0, r.t0) <= LEAST(l.t1, r.t1)
     ORDER BY l_id, r_id
 """
-
-_EXTRA8E = {
-    "interval_join": (q_interval_join, _ORACLE_INTERVAL_JOIN),
-}
-
-_BASE_REGISTRY8E = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8E()
-    out.update(_EXTRA8E)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -3093,20 +2889,6 @@ def _oracle_spatial_rels() -> str:
 """
 
 
-_EXTRA8F = {
-    "trajectory_wkt": (q_trajectory_wkt, _ORACLE_TRAJECTORY_WKT),
-    "spatial_rels_rect": (q_spatial_rels_rect, _oracle_spatial_rels()),
-}
-
-_BASE_REGISTRY8F = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8F()
-    out.update(_EXTRA8F)
-    return out
-
-
 # --------------------------------------------------------------------------
 # batch 8g: OR-of-bands cosine near-dup (the large-corpus LSH shape)
 # --------------------------------------------------------------------------
@@ -3134,6 +2916,7 @@ def _band_key_sql(vec_expr: str, planes, b: int, R: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@cache  # formats every LSH plane float; registry() calls this each time
 def _oracle_cosine_banded(bands: int = 16, rows_per_band: int = 10,
                           max_bucket: int = 20000) -> str:
     planes = _lsh_planes(bands * rows_per_band)
@@ -3159,20 +2942,6 @@ def _oracle_cosine_banded(bands: int = 16, rows_per_band: int = 10,
     WHERE ROUND(list_dot_product(ea.v, eb.v), 6) >= {_COS_TAU}
     ORDER BY id_i, id_j
 """
-
-
-_EXTRA8G = {
-    "cosine_neardup_banded": (q_cosine_neardup_banded,
-                              _oracle_cosine_banded()),
-}
-
-_BASE_REGISTRY8G = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY8G()
-    out.update(_EXTRA8G)
-    return out
 
 
 # --- NAD to a line geometry (r4 verdict #3 extension surface) ---------------
@@ -3257,19 +3026,6 @@ def q_nad_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         _nad_line_sql(_EV_PTS).replace("FROM events", "FROM {ev}"), ev=ev)
 
 
-_EXTRA9 = {
-    "nad_line": (q_nad_line, _nad_line_sql(_EV_PTS)),
-}
-
-_BASE_REGISTRY9 = registry
-
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY9()
-    out.update(_EXTRA9)
-    return out
-
-
 # --------------------------------------------------------------------------
 # multimodal: decode -> frame-sample -> pooled features over binary media
 # --------------------------------------------------------------------------
@@ -3333,41 +3089,78 @@ _ORACLE_MULTIMODAL = """
     FROM pooled GROUP BY kind ORDER BY kind
 """
 
-_EXTRA10 = {
-    "multimodal_features": (q_multimodal_features, _ORACLE_MULTIMODAL),
-}
 
-_BASE_REGISTRY10 = registry
+# --------------------------------------------------------------------------
+# registry
+# --------------------------------------------------------------------------
+# The driver's correctness gate snapshots the first 50 entries, so the 11
+# long-green queries from tpch_q1 on sit at the tail, and the later
+# additions fall inside the window.  tests/test_oracle_parity.py runs every
+# entry whatever its position; tests/test_registry.py pins this order.
 
-
-def registry():  # noqa: F811
-    out = _BASE_REGISTRY10()
-    out.update(_EXTRA10)
-    return out
-
-
-# --- Driver-snapshot ordering ------------------------------------------------
-# The driver's correctness gate snapshots exactly the FIRST 50 registry
-# entries (CORRECTNESS_r03/r04 both contain the head-of-order 50).  Demote
-# nine multi-round-green veterans to the tail so the nine queries appended
-# in rounds 3-4 (previously positions 50-58, never driver-checked) fall
-# inside the snapshot window.  All 59 still run in
-# tests/test_oracle_parity.py regardless of order.
-_DEMOTED_TAIL = [
-    "tpch_q1", "top_customers", "dedup_exact", "doc_stats",
-    "fingerprint_md5", "events_hourly", "geo_cells_tiles",
-    "knn_cosine_brute", "mercator_transform", "doc_quality",
-    # r5: demote one more veteran (sibling wcount_probe stays in the
-    # window) so multimodal_features earns a driver-oracled row.
-    "wsum_probe",
-]
-
-_BASE_REGISTRY_FINAL = registry
-
-
-def registry():  # noqa: F811 — final ordering pass
-    out = _BASE_REGISTRY_FINAL()
-    head = {k: v for k, v in out.items() if k not in _DEMOTED_TAIL}
-    tail = {k: out[k] for k in _DEMOTED_TAIL if k in out}
-    head.update(tail)
-    return head
+def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
+    return {
+        "pip_grid_join": (q_pip_grid_join, _oracle_pip_grid()),
+        "traj_metrics": (q_traj_metrics, _ORACLE_TRAJ_METRICS),
+        "value_at_timestamp": (q_value_at_timestamp, _ORACLE_VALUE_AT),
+        "twavg": (q_twavg, _ORACLE_TWAVG),
+        "traj_extent": (q_traj_extent, _ORACLE_EXTENT),
+        "minhash_dedup": (q_minhash_dedup, _ORACLE_MINHASH),
+        "langid": (q_langid, _oracle_langid()),
+        "simhash_pairs": (q_simhash_pairs, _simhash_oracle()),
+        "ann_lsh_topk": (q_ann_lsh_topk, _oracle_ann_lsh()),
+        "traj_ever_in_box": (q_traj_ever_in_box, _ORACLE_EVER_IN_BOX),
+        "pip_shuffle_join": (q_pip_shuffle_join, _oracle_pip_grid()),
+        "tagg_tcount": (q_tagg_tcount, _ORACLE_TAGG_TCOUNT),
+        "tagg_tcount_seq": (q_tagg_tcount_seq, _ORACLE_TAGG_TCOUNT_SEQ),
+        "tile_pyramid": (q_tile_pyramid, _oracle_pyramid()),
+        "dwithin_join": (q_dwithin_join, _ORACLE_DWITHIN),
+        "knn_points": (q_knn_points, _ORACLE_KNN_PTS),
+        "tile_raster": (q_tile_raster, _oracle_tile_raster()),
+        "rolling_fp": (q_rolling_fp, _ORACLE_ROLLING_FP),
+        "ann_ivf_topk": (q_ann_ivf_topk, _oracle_ann_ivf()),
+        "tcentroid_profile": (q_tcentroid_profile, _ORACLE_TCENTROID),
+        "azimuth_cumlen": (q_azimuth_cumlen, _ORACLE_AZ_CUMLEN),
+        "ttext_states": (q_ttext_states, _ORACLE_TTEXT_STATES),
+        "traj3d_metrics": (q_traj3d_metrics, _ORACLE_TRAJ3D),
+        "geog_dwithin_join": (q_geog_dwithin, _oracle_geog_dwithin()),
+        "at_period_clip": (q_at_period_clip, _ORACLE_AT_PERIOD),
+        "period_business": (q_period_business, _ORACLE_PERIOD_BUSINESS),
+        "wcount_probe": (q_wcount_probe, _ORACLE_WCOUNT),
+        "tagg_profile": (q_tagg_profile, _ORACLE_TAGG_PROFILE),
+        "at_box": (q_at_box, _oracle_at_box()),
+        "tdwithin_pairs": (q_tdwithin_pairs, _oracle_tdwithin()),
+        "nad_pairs": (q_nad_pairs, _oracle_nad()),
+        "lifted_pairs": (q_lifted_pairs, _oracle_lifted()),
+        "sessionize": (q_sessionize, _ORACLE_SESSIONIZE),
+        # the same join as pip_grid_join; the key stays so the order holds
+        "pip_jvm_join": (q_pip_grid_join, _oracle_pip_grid()),
+        "tbool_tand_tor": (q_tbool_tand_tor, _ORACLE_TBOOL),
+        "posops_boxes": (q_posops_boxes, _oracle_posops()),
+        "relate_rect": (q_relate_rect, _oracle_relate_rect()),
+        "timeops_matrix": (q_timeops_matrix, _oracle_timeops_matrix()),
+        "tmath_turning": (q_tmath_turning, _oracle_tmath_turning()),
+        "traj_accessors": (q_traj_accessors, _ORACLE_ACCESSORS),
+        "casts_tbox": (q_casts_tbox, _ORACLE_CASTS),
+        "at_range_clip": (q_at_range_clip, _oracle_at_range()),
+        "cosine_dedup": (q_cosine_dedup, _ORACLE_COSINE_BRUTE),
+        "cosine_neardup_lsh": (q_cosine_neardup_lsh, _oracle_cosine_lsh()),
+        "interval_join": (q_interval_join, _ORACLE_INTERVAL_JOIN),
+        "trajectory_wkt": (q_trajectory_wkt, _ORACLE_TRAJECTORY_WKT),
+        "spatial_rels_rect": (q_spatial_rels_rect, _oracle_spatial_rels()),
+        "cosine_neardup_banded": (q_cosine_neardup_banded,
+                                  _oracle_cosine_banded()),
+        "nad_line": (q_nad_line, _nad_line_sql(_EV_PTS)),
+        "multimodal_features": (q_multimodal_features, _ORACLE_MULTIMODAL),
+        "tpch_q1": (q_tpch_q1, _ORACLE_Q1),
+        "top_customers": (q_top_customers, _ORACLE_TOP_CUST),
+        "dedup_exact": (q_dedup_exact, _ORACLE_DEDUP),
+        "doc_stats": (q_doc_stats, _ORACLE_DOC_STATS),
+        "fingerprint_md5": (q_fingerprint_md5, _ORACLE_FP),
+        "events_hourly": (q_events_hourly, _ORACLE_EVENTS_HOURLY),
+        "geo_cells_tiles": (q_geo_cells_tiles, _oracle_cells_tiles()),
+        "knn_cosine_brute": (q_knn_cosine_brute, _ORACLE_KNN),
+        "mercator_transform": (q_mercator_transform, _ORACLE_MERCATOR),
+        "doc_quality": (q_doc_quality, _ORACLE_DOC_QUALITY),
+        "wsum_probe": (q_wsum_probe, _ORACLE_WSUM),
+    }

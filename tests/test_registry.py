@@ -1,6 +1,7 @@
 """The query registry's key order is a contract: consumers snapshot
 its first entries, so a refactor of the registry must keep it."""
 
+import __spark_entry__ as entry
 from mobilitydb_spark import queries
 
 REGISTRY_KEYS = [
@@ -26,3 +27,13 @@ REGISTRY_KEYS = [
 def test_registry_key_order_is_pinned():
     assert len(REGISTRY_KEYS) == 61
     assert list(queries.registry()) == REGISTRY_KEYS
+
+
+def test_every_entry_is_a_query_and_an_oracle():
+    for name, (fn, sql) in queries.registry().items():
+        assert callable(fn), name
+        assert isinstance(sql, str) and sql.strip(), name
+
+
+def test_every_query_has_an_oracle():
+    assert set(entry.queries()) == set(entry.oracle_sql())
