@@ -26,11 +26,13 @@ equivalent of H3 ``grid_disk`` used by the reference's
 expansion.
 
 Everything here exists in three forms:
-  * numpy kernels (used inside Arrow/pandas UDFs),
+  * numpy kernels (driver-side decoding and the test references),
   * Spark ``Column`` builders (pure built-in functions, stay in
     whole-stage codegen),
-  * SQL snippet builders shared verbatim by Spark SQL and DuckDB
-    (used by ``__spark_entry__.oracle_sql``).
+  * SQL snippet builders: ``cell_sql`` is shared verbatim by Spark SQL
+    and DuckDB (used by ``__spark_entry__.oracle_sql``); the covers
+    and rings (``cover_sql``, ``grid_disk_sql``) are Spark SQL, built
+    in Catalyst with no Python pass.
 """
 
 from __future__ import annotations
@@ -106,8 +108,9 @@ def cell_bounds(cell: np.ndarray):
 def grid_disk_np(cell: np.ndarray, k: int) -> np.ndarray:
     """k-ring neighbourhood, shape (len(cell), (2k+1)^2).
 
-    Longitude wraps modulo 2^r; latitude clamps (duplicate rows at the
-    poles are harmless for the filter step — refine dedupes).
+    Longitude wraps modulo 2^r; latitude clamps, so a row can repeat a
+    cell at the poles.  The test reference for ``grid_disk_sql`` with
+    kx = ky = k; the joins build their rings with that SQL form.
     """
     cell = np.asarray(cell, dtype=np.int64)
     r = cell_res(cell)
@@ -129,7 +132,8 @@ def grid_rect_np(cell: np.ndarray, kx: int, ky: int) -> np.ndarray:
     degrees as they are tall, so a square k-ring sized to the
     longitude radius over-covers latitude by ~2× (and the old
     ceil(deg/h)+1 sizing by another ring).  Longitude wraps modulo
-    2^r; latitude clamps."""
+    2^r; latitude clamps.  The test reference for ``grid_disk_sql``,
+    which the dwithin and kNN joins run in Catalyst."""
     cell = np.asarray(cell, dtype=np.int64)
     r = cell_res(cell)
     n = np.int64(1) << r
@@ -169,7 +173,10 @@ def cover_res_np(lon_min, lat_min, lon_max, lat_max, res: int,
 def cover_bboxes_np(lon_min, lat_min, lon_max, lat_max, res: int,
                     max_cells: int = 4096):
     """``cover_bbox_np`` of N bboxes at once, with no Python loop:
-    (cells, owner), ``owner[i]`` the index of the bbox cell i covers."""
+    (cells, owner), ``owner[i]`` the index of the bbox cell i covers.
+
+    The test reference for ``cover_sql``: the PIP joins build their
+    covers in Catalyst from each polygon's ``cover_res_np`` level."""
     lon_min, lat_min, lon_max, lat_max = (
         np.atleast_1d(np.asarray(a, dtype=np.float64))
         for a in (lon_min, lat_min, lon_max, lat_max))
@@ -213,18 +220,8 @@ def cell_col(lon: Column, lat: Column, res: int) -> Column:
             + x * F.lit(X_SHIFT).cast("long") + y)
 
 
-def cell_parent_col(cell: Column, res: int, parent_res: int) -> Column:
-    """Coarsen a cell id column (both resolutions statically known)."""
-    dr = res - parent_res
-    x = F.shiftright(cell, X_BITS) % F.lit(X_SHIFT)
-    y = cell % F.lit(X_SHIFT)
-    return (F.lit(parent_res * R_SHIFT).cast("long")
-            + F.shiftright(x, dr) * F.lit(X_SHIFT).cast("long")
-            + F.shiftright(y, dr))
-
-
 # ---------------------------------------------------------------------------
-# shared SQL snippets (identical text runs in Spark SQL and DuckDB)
+# SQL snippets (``cell_sql`` text runs in Spark SQL and DuckDB alike)
 # ---------------------------------------------------------------------------
 
 def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
@@ -235,6 +232,44 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     y = (f"LEAST(GREATEST(CAST(FLOOR((90.0 - ({lat_expr})) / 180.0 * {n}) "
          f"AS BIGINT), 0), {n - 1})")
     return (f"(CAST({res} AS BIGINT) * {R_SHIFT} + ({x}) * {X_SHIFT} + ({y}))")
+
+
+def _xy_sql(lon_expr: str, lat_expr: str, n_expr: str) -> tuple[str, str]:
+    """Spark SQL text of ``xy_np`` with the cells per axis, ``n_expr``,
+    as SQL text: the same float64 steps, so the same indices."""
+    def index(num: str, span: str) -> str:
+        return (f"least(greatest(floor({num} / {span} * {n_expr}), 0L), "
+                f"{n_expr} - 1)")
+    return (index(f"({lon_expr} + 180D)", "360D"),
+            index(f"(90D - ({lat_expr}))", "180D"))
+
+
+def _cell_id_sql(r_expr: str, x_expr: str, y_expr: str) -> str:
+    """Spark SQL text packing a level and bigint (x, y) into a cell id."""
+    return (f"(shiftleft(CAST({r_expr} AS BIGINT), {R_BITS}) "
+            f"| shiftleft({x_expr}, {X_BITS}) | {y_expr})")
+
+
+def cell_at_sql(lon_expr: str, lat_expr: str, r_expr: str) -> str:
+    """Spark SQL text: ``cell_np`` at a per-row level ``r_expr`` (for
+    instance a lambda variable), where ``cell_sql`` takes a constant."""
+    x, y = _xy_sql(lon_expr, lat_expr, f"shiftleft(1L, {r_expr})")
+    return _cell_id_sql(r_expr, x, y)
+
+
+def cover_sql(r_expr: str, bx0: str, by0: str, bx1: str, by1: str) -> str:
+    """Spark SQL text: the array of cells at level ``r_expr`` whose box
+    intersects the bbox (bx0, by0, bx1, by1) — ``cover_bboxes_np``'s
+    cover of one row at the level it picked, column-major like it.
+
+    A ``sequence`` over the x index range, one over the y range, and
+    the cell id built as ``grid_disk_sql`` builds it."""
+    n = f"shiftleft(1L, {r_expr})"
+    x0, y1 = _xy_sql(bx0, by0, n)
+    x1, y0 = _xy_sql(bx1, by1, n)
+    return (f"flatten(transform(sequence({x0}, {x1}), gx -> "
+            f"transform(sequence({y0}, {y1}), gy -> "
+            f"{_cell_id_sql(r_expr, 'gx', 'gy')})))")
 
 
 def grid_disk_sql(cell_expr: str, kx_expr: str, ky_expr: str) -> str:
@@ -255,5 +290,4 @@ def grid_disk_sql(cell_expr: str, kx_expr: str, ky_expr: str) -> str:
     ys = (f"sequence(greatest({y} - {ky_expr}, 0L), "
           f"least({y} + {ky_expr}, {n} - 1))")
     return (f"flatten(transform({xs}, gx -> transform({ys}, gy -> "
-            f"shiftleft(CAST({r} AS BIGINT), {R_BITS}) "
-            f"| shiftleft(gx, {X_BITS}) | gy)))")
+            f"{_cell_id_sql(r, 'gx', 'gy')})))")

@@ -7,8 +7,8 @@ Mirrors the reference's random-table generators
 - ``pages``: Common-Crawl-style rows (url, warc_ts, html, text, lang)
   with 0–10 ``geo:{lat:.5f},{lon:.5f}`` geotags embedded in ``text``;
   **byte-identical text per url across runs** (the per-row invariant
-  from BASELINE.json.input_hint).  Domains are Zipf-distributed to
-  produce the hot-key skew the salting path is tested against.
+  from BASELINE.json.input_hint).  Domains are Zipf-distributed, a
+  hot-key skew.
 - ``polygons``: admin (small → broadcast path) and grid (large →
   shuffle path) layers, convex hulls over the Europe box
   `BOX(-10 32, 35 72)` (`create_test_tables_tpoint.sql:12-14`).
@@ -76,7 +76,7 @@ def _pages_batch(ids: np.ndarray) -> pd.DataFrame:
     n_words = 20 + np.floor(_u01(ids, 4) * 60).astype(np.int64)
 
     # two coordinate regimes per FIXTURES.md: Europe box + a local
-    # hot-cluster (skew) near (8E, 50N) for hot-cell salting tests
+    # hot-cluster (skew) near (8E, 50N)
     texts = []
     for i, rid in enumerate(ids):
         k = int(n_tags[i])

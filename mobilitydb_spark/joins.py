@@ -4,26 +4,24 @@ The reference's joins are PostgreSQL index nested loops over GiST
 R-trees (`point/src/sql/70_tpoint_gist.in.sql`,
 `point/src/tpoint_gist.c:51-199`).  On Spark the equivalents are:
 
-- **broadcast path** (small polygon layer): the cell cover and the
-  polygon edges ride broadcast joins, no shuffle —
-  `pipeline.pip_join_broadcast`
-- **shuffle path** (large polygon layer, this module): both sides
-  keyed by grid cell; polygons exploded to their cell cover, points
-  to their single cell; equi-join on cell then exact PIP refine.
-  Both paths refine with the one Catalyst predicate ``pip_filter``.
-  A point lives in exactly one cell and a polygon covers that cell
-  at most once, so candidate pairs are already distinct — no
-  post-refine dedupe shuffle.
-- **explicit hot-cell salting**: Zipf-skewed inputs (popular
-  domains/regions) concentrate points in a few cells.  Cells above
-  ``hot_threshold`` get their points split across ``n_salts``
-  sub-keys and their polygon rows replicated per salt — bounding any
-  single task's share of a hot cell.  (AQE skew-join splitting is ON
-  as well; salting keeps the plan safe even where AQE can't split,
-  e.g. pre-aggregation stages.)
-- **dwithin join**: grid_disk ring expansion of the point cell
-  (replaces ``a && expand(b, d)``,
-  `66_tpoint_spatialrels.in.sql:394-445`) then exact distance refine
+- **PIP join** (``pip_join``, one plan): polygons decode to one dim
+  row each (poly_id, cover level, bbox, edges); their covers are
+  built in Catalyst from the bbox, points take their cell at every
+  cover level present, the two sides equi-join on the cell and the
+  one Catalyst predicate ``pip_filter`` refines.  A point lives in
+  one cell per level and a polygon covers each cell at most once, so
+  candidate pairs are already distinct — no post-refine dedupe.  The
+  entry points differ only in the dim: `pipeline.pip_join_broadcast`
+  decodes a small pandas layer on the driver and broadcasts it,
+  ``pip_join_shuffle`` decodes a polygon DataFrame in one
+  ``mapInArrow``.  Skewed cells are left to AQE's skew-join split:
+  explicit hot-cell salting measured slower on a 30 % hot cluster
+  and was removed.
+- **dwithin joins**: each left row explodes to the cell ring that
+  covers the distance, built in Catalyst (``cells.grid_disk_sql``,
+  replaces ``a && expand(b, d)``,
+  `66_tpoint_spatialrels.in.sql:394-445`), then an exact distance
+  refine
 - **kNN join**: exact by construction (`|=|` ordering,
   `56_tpoint_spatialfuncs.in.sql:186-214`) — the per-cell candidate
   counts of a resolution ladder ending in the one-cell level 0 give
@@ -38,11 +36,9 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from . import cells, geo
 
@@ -83,12 +79,14 @@ def pip_polygons(pids, wkbs) -> tuple[np.ndarray, list, np.ndarray]:
             np.reshape(bbox, (-1, 4)))
 
 
-def pip_dim_table(pids: np.ndarray, rings: list, bbox: np.ndarray
-                  ) -> pa.Table:
-    """``pip_polygons`` output as an Arrow (poly_id, ``PIP_DIM_FIELDS``)
-    table: one edges list per polygon, built without a Python loop
-    over edges.
+def pip_dim_table(pids: np.ndarray, rings: list, bbox: np.ndarray,
+                  res: int) -> pa.Table:
+    """``pip_polygons`` output as the Arrow dim ``pip_join`` reads:
+    (poly_id, r, ``PIP_DIM_FIELDS``), one edges list per polygon, built
+    without a Python loop over edges.
 
+    ``r`` is the polygon's cover level, ``cells.cover_res_np`` of its
+    bbox: the finest level up to ``res`` whose cover fits the cap.
     dx, dy and l2 are the very float64 values ``geo.points_in_polygon``
     computes, so ``pip_filter`` reproduces it bit for bit; ex0..ey1 is
     the edge's PIP_PAD-dilated bbox, a cheap guard ahead of the
@@ -106,7 +104,9 @@ def pip_dim_table(pids: np.ndarray, rings: list, bbox: np.ndarray
     n = [sum(len(r) - 1 for r in rs) for rs in rings]
     offsets = np.concatenate([[0], np.cumsum(n)]).astype(np.int32)
     return pa.table({
-        "poly_id": pids, "edges": pa.ListArray.from_arrays(offsets, edges),
+        "poly_id": pids,
+        "r": pa.array(cells.cover_res_np(*bbox.T, res=res), pa.int32()),
+        "edges": pa.ListArray.from_arrays(offsets, edges),
         "bx0": bbox[:, 0], "by0": bbox[:, 1],
         "bx1": bbox[:, 2], "by1": bbox[:, 3]})
 
@@ -147,137 +147,92 @@ def pip_filter(cand: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# polygon cell covers (the "index build" side)
+# the one PIP join plan (covers in Catalyst, both entry points)
 # ---------------------------------------------------------------------------
 
-def polygon_covers(polygons: DataFrame, res: int = DEFAULT_RES,
-                   max_cells: int = 4096) -> DataFrame:
-    """(cell, poly_id): conservative cover of each polygon's padded bbox.
+def pip_join(points: DataFrame, dim: DataFrame,
+             levels: list[int] | None = None) -> DataFrame:
+    """Points (lon, lat, ...) ⋈ a polygon dim (poly_id, r,
+    ``PIP_DIM_FIELDS``): the point columns plus ``poly_id`` for every
+    polygon that contains the point, boundary included.
 
-    Coarse polygons fall back to coarser cells (cover_bbox_np caps the
-    cell count), so the cell ids carry their resolution in the high
-    bits — the join must probe each distinct cover resolution
-    (normally just one).  The rows are slim: at crawl scale replicated
-    geometry, not the cell ids, would dominate cover shuffle volume,
-    so the edges join back on poly_id after the cell join.
-    """
-    out_schema = StructType([StructField("cell", LongType()),
-                             StructField("poly_id", LongType())])
+    Filter: each dim row's padded bbox explodes to its cells at its
+    cover level ``r`` (``cells.cover_sql``); each point takes its cell
+    at every cover level present, in one explode, and the two sides
+    equi-join on ``jcell``.  Refine: candidates join back their
+    polygon's dim row and pass ``pip_filter``.  A point lies in one
+    cell per level and a polygon covers each of its cells once, at one
+    level, so candidate pairs are distinct with no dedupe.
 
-    def explode_cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, _, bbox = pip_polygons(pdf["poly_id"], pdf["geom_wkb"])
-            if len(pids):
-                cc, owner = cells.cover_bboxes_np(*bbox.T, res=res,
-                                                  max_cells=max_cells)
-                yield pd.DataFrame({"cell": cc, "poly_id": pids[owner]})
+    ``levels`` are the dim's cover levels when the driver knows them:
+    the point cells are then constant-level expressions in whole-stage
+    codegen (a lambda over the level array measured 0.98 s against
+    0.81 s per flagship pass: 15k pages, grid layer, ``local[4]``).
+    Otherwise a scalar subquery reads the levels from the dim, so
+    building the join starts no job.  A broadcast hint on ``dim``
+    reaches both joins."""
+    if levels is None:
+        pts = points.withColumn(
+            "jcell", dim.select(F.collect_set("r")).scalar()).withColumn(
+            "jcell", F.expr("explode(transform(jcell, lv -> "
+                            + cells.cell_at_sql("lon", "lat", "lv") + "))"))
+    else:
+        pts = points.withColumn("jcell", F.expr("explode(array(" + ", ".join(
+            cells.cell_sql("lon", "lat", r) for r in levels) + "))"))
+    cover = dim.selectExpr("poly_id", "explode("
+                           + cells.cover_sql("r", "bx0", "by0", "bx1", "by1")
+                           + ") AS jcell")
+    cand = pts.join(cover, "jcell").join(dim.drop("r"), "poly_id")
+    return pip_filter(cand).select(*points.columns, "poly_id")
 
-    return polygons.select("poly_id", "geom_wkb") \
-        .mapInPandas(explode_cover, out_schema)
 
+def polygon_dim(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """(poly_id, r, ``PIP_DIM_FIELDS``): ``pip_dim_table`` of a polygon
+    DataFrame (poly_id, geom_wkb), decoded in one ``mapInArrow``."""
 
-def polygon_dim(polygons: DataFrame, res: int = DEFAULT_RES,
-                max_cells: int = 4096) -> DataFrame:
-    """(poly_id, r, ``PIP_DIM_FIELDS``): one row per polygon.
-
-    ``r`` is the resolution its cover uses; the rest is what
-    ``pip_filter`` reads.  Bounds-only — no cell explosion — so a
-    caller can enumerate the distinct cover levels with a job that is
-    O(#polygons), not O(#cover cells)."""
-
-    def pick(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             polys = pip_polygons(batch.column("poly_id").to_pylist(),
                                  batch.column("geom_wkb").to_pylist())
             if len(polys[0]):
-                r = cells.cover_res_np(*polys[2].T, res=res,
-                                       max_cells=max_cells)
-                yield from pip_dim_table(*polys).add_column(
-                    1, "r", pa.array(r, pa.int32())).to_batches()
+                yield from pip_dim_table(*polys, res).to_batches()
 
     return polygons.select("poly_id", "geom_wkb").mapInArrow(
-        pick, f"poly_id bigint, r int, {PIP_DIM_FIELDS}")
-
-
-def hot_cells(points: DataFrame, res: int = DEFAULT_RES,
-              threshold: int = 100_000) -> list[int]:
-    """Cells whose point count exceeds ``threshold`` (the salting set).
-
-    One cheap pre-pass aggregation; at 100 TB this is a counts-only
-    scan that AQE coalesces, and the result is a tiny driver list."""
-    cnt = (points
-           .select(F.expr(cells.cell_sql("lon", "lat", res)).alias("cell"))
-           .groupBy("cell").count()
-           .where(F.col("count") > threshold)
-           .select("cell").collect())
-    return [r["cell"] for r in cnt]
+        decode, f"poly_id bigint, r int, {PIP_DIM_FIELDS}")
 
 
 def pip_join_shuffle(points: DataFrame, polygons: DataFrame,
-                     res: int = DEFAULT_RES,
-                     hot: list[int] | None = None,
-                     n_salts: int = 8,
-                     salt_key: str = "url") -> DataFrame:
-    """Shuffle spatial join: points ⋈ large polygon layer.
+                     res: int = DEFAULT_RES) -> DataFrame:
+    """Spatial join of points against a polygon DataFrame of any size:
+    ``pip_join`` over its ``polygon_dim``, covered at levels up to
+    ``res``.  The cell equi-join shuffles unless AQE finds a side small
+    enough to broadcast; AQE also splits skewed cells.
 
-    Phase 1 (filter): equi-join on grid cell — points carry their
-    single cell, polygons their exploded cover (possibly at coarser
-    resolutions, probed per distinct cover level).  Phase 2 (refine):
-    ``pip_filter`` against the polygon's ``polygon_dim`` row.  Hot
-    cells get salted: point rows gain ``salt = xxhash64(salt_key) %
-    n_salts`` and matching polygon cover rows are replicated across
-    all salts.
-    """
-    point_cols = [c for c in points.columns]
-    pts = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
-    # SLIM covers: the shuffle moves (cell, poly_id) pairs only; the
-    # edges join back on poly_id after the cell equi-join (Catalyst
-    # auto-broadcasts a small dim; AQE converts at runtime otherwise),
-    # so polygon bytes never replicate per cover cell.
-    covers = polygon_covers(polygons, res)
-    dim = polygon_dim(polygons, res)
-    # polygons may cover at coarser resolutions; probe each present
-    # level — enumerated from the O(#polygons) dim, not by evaluating
-    # the cover explosion twice
-    res_rows = [row["r"] for row in dim.select("r").distinct().collect()]
-    if not res_rows:  # no polygon has a ring the PIP test reads
-        return points.withColumn("poly_id", F.lit(None).cast("bigint")) \
-            .limit(0)
-    dim = dim.drop("r")
-    joined_parts = []
-    for r in sorted(res_rows):
-        cov_r = covers.where(
-            F.shiftright("cell", cells.R_BITS) == r)
-        pts_r = pts.withColumn(
-            "jcell", F.col("cell") if r == res
-            else cells.cell_parent_col(F.col("cell"), res, r))
-        cov_r = cov_r.withColumnRenamed("cell", "jcell")
-        if hot:
-            hot_at_r = [int(cells.cell_parent_np(np.array([h]), r)[0])
-                        if (h >> cells.R_BITS) != r else h for h in hot]
-            is_hot = F.col("jcell").isin(hot_at_r)
-            pts_r = pts_r.withColumn(
-                "salt", F.when(is_hot,
-                               F.pmod(F.xxhash64(salt_key), F.lit(n_salts)))
-                         .otherwise(F.lit(0)))
-            cov_r = cov_r.withColumn(
-                "salt", F.explode(F.when(
-                    is_hot, F.sequence(F.lit(0), F.lit(n_salts - 1)))
-                    .otherwise(F.array(F.lit(0)))))
-            joined = pts_r.join(cov_r, ["jcell", "salt"])
-        else:
-            joined = pts_r.join(cov_r, "jcell")
-        joined_parts.append(pip_filter(joined.join(dim, "poly_id"))
-                            .select(*point_cols, "poly_id"))
-    out = joined_parts[0]
-    for p in joined_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    The dim's Python decode runs once per consumer (levels, cover and
+    refine): each reads its own column subset, so no exchange is
+    reused."""
+    return pip_join(points, polygon_dim(polygons, res))
 
 
 # ---------------------------------------------------------------------------
-# dwithin join (ring expansion)
+# dwithin joins (Catalyst ring expansion)
 # ---------------------------------------------------------------------------
+
+def _ring_join(left: DataFrame, right: DataFrame, res: int, kx: str,
+               ky: str, right_id: str) -> DataFrame:
+    """Candidate pairs (left columns, right_id, r_lon, r_lat): each left
+    row explodes to the (2kx+1)×(2ky+1) cell ring around its cell at
+    ``res`` (``cells.grid_disk_sql``, no cell twice; ``kx`` and ``ky``
+    are SQL text over the left row) and equi-joins the right rows'
+    cells on ``jcell``."""
+    lexp = left.withColumn(
+        "cell", F.expr(cells.cell_sql("lon", "lat", res))).withColumn(
+        "jcell", F.expr(f"explode({cells.grid_disk_sql('cell', kx, ky)})"))
+    rpts = right.selectExpr(
+        right_id, "lon AS r_lon", "lat AS r_lat",
+        f"{cells.cell_sql('lon', 'lat', res)} AS jcell")
+    return lexp.join(rpts, "jcell")
+
 
 def dwithin_join(left: DataFrame, right: DataFrame, dist_deg: float,
                  res: int = DEFAULT_RES,
@@ -285,42 +240,16 @@ def dwithin_join(left: DataFrame, right: DataFrame, dist_deg: float,
     """All (left, right) point pairs within ``dist_deg`` planar degrees.
 
     left: (l_id, lon, lat); right: (r_id, lon, lat).  Left rows explode
-    to a grid_disk whose radius covers dist_deg (the ``expand``/&&
-    prefilter); the refine step is an exact vectorized distance test.
+    to a cell ring whose radius covers dist_deg (the ``expand``/&&
+    prefilter); the refine step is an exact distance test.
     """
     n = 1 << res
-    cell_h = 180.0 / n  # the smaller cell edge (lat direction)
-    # per-axis cover rings (r6): a point within dist_deg sits at most
-    # floor(dist / cell_width)+1 indices away per axis; lon cells are
-    # 2x wider than lat cells, so the old square ceil(d/h)+1 ring
-    # over-covered both axes
+    # per-axis rings (r6): a point within dist_deg sits at most
+    # floor(dist / cell_size) + 1 indices away on each axis, and lon
+    # cells are twice as wide in degrees as lat cells
     kx = min(int(dist_deg / (360.0 / n)) + 1, n)
-    ky = min(int(dist_deg / cell_h) + 1, n)
-
-    lpts = left.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
-
-    disk_schema = StructType(list(lpts.schema.fields)
-                             + [StructField("jcell", LongType())])
-
-    def explode_disk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            disk = cells.grid_rect_np(pdf["cell"].to_numpy(), kx, ky)
-            m = disk.shape[1]
-            rep = pdf.loc[pdf.index.repeat(m)].reset_index(drop=True)
-            rep["jcell"] = disk.ravel()
-            # a polar clamp can duplicate cells inside one row's disk
-            rep = rep.drop_duplicates(
-                subset=[left_id, "jcell"], ignore_index=True)
-            yield rep
-
-    lexp = lpts.mapInPandas(explode_disk, disk_schema)
-    rpts = right.select(
-        F.col(right_id), F.col("lon").alias("r_lon"),
-        F.col("lat").alias("r_lat")).withColumn(
-        "jcell", F.expr(cells.cell_sql("r_lon", "r_lat", res)))
-    cand = lexp.join(rpts, "jcell")
+    ky = min(int(dist_deg / (180.0 / n)) + 1, n)
+    cand = _ring_join(left, right, res, str(kx), str(ky), right_id)
     d2 = ((F.col("lon") - F.col("r_lon")) ** 2
           + (F.col("lat") - F.col("r_lat")) ** 2)
     return (cand.where(d2 <= F.lit(float(dist_deg) ** 2))
@@ -336,12 +265,13 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     meters (geography mode, `tpoint_spatialrels.c:166-170`).
 
     Same two-phase shape as ``dwithin_join``: a conservative planar
-    grid-disk prefilter whose radius is sized PER ROW from the row's
-    own latitude (the longitude shrink 1/cos(φ) is evaluated at the
-    highest latitude a match could sit at, |lat|+dist, so high-latitude
-    rows get the wider disk they need instead of silently dropping
-    pairs), then an exact haversine refine that stays in whole-stage
-    codegen via the shared `geog.haversine_sql` expression.
+    cell-ring prefilter whose longitude radius is sized PER ROW from
+    the row's own latitude (the longitude shrink 1/cos(φ) is evaluated
+    at the highest latitude a match could sit at, |lat|+dist, so
+    high-latitude rows get the wider ring they need instead of
+    silently dropping pairs), then an exact haversine refine that
+    stays in whole-stage codegen via the shared `geog.haversine_sql`
+    expression.
 
     ``res`` is a floor, not the grid used: the grid is auto-fitted to
     ``dist_m`` and only ever made finer than ``res``.  The result does
@@ -350,7 +280,7 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     # Auto-fit the grid to the query distance (r6): the caller's res is
     # a FLOOR, and the effective resolution sizes cells near the search
     # radius (cell edge ~ half the equatorial radius in degrees).  A
-    # coarse fixed grid makes the k-ring cover a disk of area
+    # coarse fixed grid makes the ring cover a disk of area
     # ~(deg + 2·cell)², so oversized cells inflate candidates
     # quadratically — measured at sf1.0 / 50 km: res 7 -> 11.5 s,
     # res 9 -> 5.9 s, res 10 -> 8.4 s (explode volume wins past the
@@ -363,54 +293,24 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     cell_h = 180.0 / n
     # 1° latitude ≈ 110 574 m; longitude degrees shrink by cos(lat)
     lat_pad = dist_m / 110574.0
-
-    lpts = left.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", res)))
-    disk_schema = StructType(list(lpts.schema.fields)
-                             + [StructField("jcell", LongType())])
-
-    # per-axis cover rings (r6): a point within dist_m sits at most
-    # floor(radius_axis / cell_width_axis) + 1 cell indices away on
-    # that axis (worst case: the query point at its cell's edge), and
-    # longitude cells are twice as wide in degrees as latitude cells —
-    # the old square ceil(deg/cell_h)+1 ring over-covered both axes
-    # (49 vs 15 joined cells per row at res 9 / 50 km, ~3× the
-    # candidate pairs into the haversine refine)
+    # per-axis rings (r6): a point within dist_m sits at most
+    # floor(radius_axis / cell_size_axis) + 1 cell indices away on that
+    # axis, and longitude cells are twice as wide in degrees as
+    # latitude cells.  Near the pole the linear Δλ bound under-covers
+    # (the asin(sin(d/2R)/cosφ) chord bound diverges from d/cosφ as
+    # cosφ → d/R), so rows at |φ| ≥ 85° take the full parallel — they
+    # are rare and their cells tiny.
     ky = min(int(lat_pad / cell_h) + 1, n)
-
-    def explode_disk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            phi = np.minimum(np.abs(pdf["lat"].to_numpy()) + lat_pad, 89.9)
-            deg = dist_m / (110574.0 * np.cos(np.radians(phi)))
-            kxs = np.minimum((deg / (2.0 * cell_h)).astype(np.int64) + 1, n)
-            # near the pole the linear Δλ bound under-covers (the
-            # asin(sin(d/2R)/cosφ) chord bound diverges from d/cosφ
-            # as cosφ → d/R); wrap the full parallel there — rows at
-            # |φ| ≥ 85° are rare and their cells tiny
-            kxs = np.where(phi >= 85.0, n, kxs)
-            for kx in np.unique(kxs):
-                sub = pdf.loc[kxs == kx]
-                disk = cells.grid_rect_np(sub["cell"].to_numpy(),
-                                          int(kx), ky)
-                m = disk.shape[1]
-                rep = sub.loc[sub.index.repeat(m)].reset_index(drop=True)
-                rep["jcell"] = disk.ravel()
-                rep = rep.drop_duplicates(
-                    subset=[left_id, "jcell"], ignore_index=True)
-                yield rep
-
-    lexp = lpts.mapInPandas(explode_disk, disk_schema)
-    rpts = right.select(
-        F.col(right_id), F.col("lon").alias("r_lon"),
-        F.col("lat").alias("r_lat")).withColumn(
-        "jcell", F.expr(cells.cell_sql("r_lon", "r_lat", res)))
-    cand = lexp.join(rpts, "jcell")
+    phi = f"least(abs(lat) + {lat_pad!r}D, 89.9D)"
+    kx = (f"IF({phi} >= 85D, {n}L, least(CAST({float(dist_m)!r}D / "
+          f"(110574D * cos(radians({phi}))) / {2.0 * cell_h!r}D AS BIGINT)"
+          f" + 1, {n}L))")
+    cand = _ring_join(left, right, res, kx, str(ky), right_id)
     dist = F.expr(haversine_sql("lon", "lat", "r_lon", "r_lat"))
     # cheap Δlat short-circuit ahead of the trig: meridional distance
     # is >= Δlat_deg · (π·R/180) ≈ Δlat · 111195 m, so any true match
     # satisfies |Δlat| <= dist_m/110574 (the conservative lat_pad) —
-    # the k-ring spans up to k cells of latitude, so this prunes the
+    # the ring spans up to ky cells of latitude, so this prunes the
     # ring's corner candidates before the haversine evaluates
     return (cand.where((F.abs(F.col("lat") - F.col("r_lat"))
                         <= F.lit(float(lat_pad)))

@@ -28,7 +28,6 @@ import time
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -145,15 +144,14 @@ def pip_join_broadcast(points: DataFrame, polygons_pdf: pd.DataFrame,
     """Spatial join against a small polygon layer, with no shuffle and
     no Python on the executors.
 
-    The layer is decoded once on the driver into two broadcast dims:
-    its cell cover (``jcell``, ``poly_id``) and one edges + bbox row
-    per polygon.  Candidates come from a broadcast equi-join on the
-    cover; ``joins.pip_filter`` refines them — the same closed-boundary
-    predicate as the shuffle path.  One whole-stage-codegen pipeline
-    runs from the parquet scan to the join output, so the join scales
-    with the scan.
+    The layer is decoded once on the driver into one polygon dim
+    (``joins.pip_dim_table``) and broadcast; ``joins.pip_join`` builds
+    its cell cover in Catalyst, joins it on the points' cells and
+    refines with ``joins.pip_filter`` — the same plan and the same
+    closed-boundary predicate as the shuffle path.  One
+    whole-stage-codegen pipeline runs from the parquet scan to the join
+    output, so the join scales with the scan.
     """
-    spark = points.sparkSession
     pids, rings, bbox = joins.pip_polygons(polygons_pdf["poly_id"],
                                            polygons_pdf["geom_wkb"])
     if not len(pids):
@@ -170,22 +168,7 @@ def pip_join_broadcast(points: DataFrame, polygons_pdf: pd.DataFrame,
                                   bbox[:, 3] - bbox[:, 1]))
         med = max(dims[len(dims) // 2], 1e-6)
         index_res = int(np.clip(round(np.log2(180.0 / med)), 4, 12))
-    jcell, owner = cells.cover_bboxes_np(*bbox.T, res=index_res)
-    level = jcell >> cells.R_BITS
-    dim = F.broadcast(spark.createDataFrame(
-        joins.pip_dim_table(pids, rings, bbox)))
-
-    out_parts = []
-    for r in np.unique(level).tolist():
-        at_r = level == r
-        cov_r = spark.createDataFrame(
-            pa.table({"jcell": jcell[at_r], "poly_id": pids[owner[at_r]]}))
-        pts_r = points.withColumn(
-            "jcell", F.expr(cells.cell_sql("lon", "lat", int(r))))
-        cand = pts_r.join(F.broadcast(cov_r), "jcell").join(dim, "poly_id")
-        out_parts.append(joins.pip_filter(cand)
-                         .select(*points.columns, "poly_id"))
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    dim = joins.pip_dim_table(pids, rings, bbox, index_res)
+    return joins.pip_join(
+        points, F.broadcast(points.sparkSession.createDataFrame(dim)),
+        sorted(set(dim.column("r").to_pylist())))

@@ -3,11 +3,12 @@
 Single place where execution knobs live so tests, bench and
 spark-submit entrypoints share one configuration story:
 
-- AQE on (runtime coalescing + skew-join splitting — the dynamic
-  complement to our explicit hot-cell salting)
+- AQE on (runtime coalescing + skew-join splitting, the joins' only
+  skew mitigation)
 - Arrow execution for every pandas UDF (all kernels are Arrow-batched)
-- shuffle partitions sized for the local[32] sandbox; a real cluster
-  overrides via spark-submit --conf (documented in README)
+- with no master given, ``local[n]`` over the machine's cores, and
+  shuffle partitions matched to the cores the master names; a real
+  cluster overrides via spark-submit --conf (documented in README)
 """
 
 from __future__ import annotations
@@ -23,16 +24,18 @@ def get_spark(app: str = "mobilitydb-spark", master: str | None = None,
     """``extra_conf`` lets callers set master-specific knobs (e.g.
     ``local-cluster[n,c,mem]`` needs spark.executor.memory and an
     executor-side PYTHONPATH) without duplicating the defaults."""
+    cores = str(os.cpu_count() or 1)
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', cores)}]"
     if shuffle_partitions is None:
         # local mode: match core count; on a cluster this is overridden
-        n = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1:master.find("]")] if "[" in master \
+            else cores
         if n == "*":
-            shuffle_partitions = 32
-        elif "," in n:  # local-cluster[N,cores,mem] -> N*cores
-            execs, cores = n.split(",")[:2]
-            shuffle_partitions = max(8, int(execs) * int(cores))
+            n = cores
+        if "," in n:  # local-cluster[N,cores,mem] -> N*cores
+            execs, per_exec = n.split(",")[:2]
+            shuffle_partitions = max(8, int(execs) * int(per_exec))
         else:
             shuffle_partitions = max(8, int(n))
     b = (SparkSession.builder.appName(app).master(master)
@@ -44,12 +47,12 @@ def get_spark(app: str = "mobilitydb-spark", master: str | None = None,
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-         # 32 MB input splits (not the 128 MB default): the bench
-         # fixtures are ~6 MB parquet files that pack into ~20 read
-         # partitions at 128 MB — a 16/32-core run then starves on the
-         # scan stage (r4: flagship 4->16 efficiency 0.52 -> 0.8+ after
-         # this change).  On a real cluster the input is thousands of
-         # files and this knob is overridden via spark-submit --conf.
+         # 32 MB input splits (not the 128 MB default): the fixtures
+         # are a few parquet files of a few MB each, and at 128 MB they
+         # pack into fewer read tasks than there are cores, so the scan
+         # stage leaves cores idle.  On a real cluster the input is
+         # thousands of files and this knob is overridden via
+         # spark-submit --conf.
          .config("spark.sql.files.maxPartitionBytes", "33554432")
          .config("spark.ui.enabled", "false"))
     for k, v in (extra_conf or {}).items():

@@ -231,3 +231,41 @@ def test_grid_disk_sql_matches_numpy_without_duplicates(spark):
                                                   row.kx)[0])
         assert len(row.disk) == len(set(row.disk)), row
         assert set(row.disk) == {int(c) for c in want}, row
+
+
+def test_cover_sql_matches_numpy(spark):
+    """``cells.cover_sql`` (the PIP joins' Catalyst cover) holds exactly
+    the cells of ``cover_bboxes_np``, in its order and with none twice,
+    for bboxes covered at mixed levels in one column: bboxes past the
+    poles and the antimeridian clamp to the grid, and a bbox covered
+    at level 0 takes the one cell of the whole grid.  ``cell_at_sql``
+    (the points' cell at a per-row level) agrees with ``cell_np``."""
+    import pandas as pd
+    rng = np.random.default_rng(9)
+    n = 300
+    x0 = rng.uniform(-185, 180, n)
+    y0 = rng.uniform(-95, 90, n)
+    w = rng.uniform(0, 20, n) ** 2 / 10
+    h = rng.uniform(0, 20, n) ** 2 / 20
+    x0 = np.r_[x0, [-181.0, 179.9, -10.0, 170.0, -180.0, 0.0]]
+    y0 = np.r_[y0, [80.0, -91.0, 89.99, -90.0, -90.0, 0.0]]
+    x1 = np.r_[x0[:n] + w, [-170.0, 181.0, 10.0, 180.0, 180.0, 1.0]]
+    y1 = np.r_[y0[:n] + h, [91.0, -80.0, 95.0, -89.99, 90.0, 1.0]]
+    res = np.r_[rng.integers(0, 17, n), [8, 8, 12, 16, 3, 0]]
+    cap = np.r_[rng.choice([1, 4, 64, 256], n), [64, 64, 256, 4, 4096, 64]]
+    r = np.array([cells.cover_res_np(*b, res=int(rr), max_cells=int(c))
+                  for *b, rr, c in zip(x0, y0, x1, y1, res, cap)])
+    assert {0, 1} <= set(r) and len(set(r)) > 10
+    df = spark.createDataFrame(pd.DataFrame(
+        {"i": np.arange(len(r)), "r": r.astype(np.int32), "bx0": x0,
+         "by0": y0, "bx1": x1, "by1": y1}))
+    got = df.selectExpr(
+        "i", f"{cells.cover_sql('r', 'bx0', 'by0', 'bx1', 'by1')} AS cover",
+        f"{cells.cell_at_sql('bx0', 'by0', 'r')} AS cell"
+    ).orderBy("i").collect()
+    for row in got:
+        i = row.i
+        want = cells.cover_bboxes_np(x0[i], y0[i], x1[i], y1[i],
+                                     int(res[i]), int(cap[i]))[0]
+        assert list(row.cover) == want.tolist(), (i, r[i])
+        assert row.cell == cells.cell_np(x0[i], y0[i], int(r[i])), i

@@ -74,26 +74,31 @@ def test_haversine_sql_matches_numpy(spark):
     assert np.allclose(got, want, rtol=1e-12, atol=1e-6)
 
 
-def test_dwithin_join_geog_matches_brute(spark):
-    import pandas as pd
+def _assert_geog_dwithin_is_brute(spark, pdf, dist_m, res):
     from mobilitydb_spark import joins
-    rng = np.random.default_rng(11)
-    n = 120
-    pdf = pd.DataFrame({"pid": np.arange(n),
-                        "lon": rng.uniform(-10, 35, n),
-                        "lat": rng.uniform(32, 72, n)})
     df = spark.createDataFrame(pdf)
     l = df.selectExpr("pid AS l_id", "lon", "lat")
     r = df.selectExpr("pid AS r_id", "lon", "lat")
-    got = joins.dwithin_join_geog(l, r, 300_000.0, res=6).toPandas()
+    got = joins.dwithin_join_geog(l, r, dist_m, res=res).toPandas()
     got_pairs = {(a, b) for a, b in zip(got["l_id"], got["r_id"]) if a < b}
     d = geo.haversine_m(pdf["lon"].to_numpy()[:, None],
                         pdf["lat"].to_numpy()[:, None],
                         pdf["lon"].to_numpy()[None, :],
                         pdf["lat"].to_numpy()[None, :])
-    ii, jj = np.nonzero(d <= 300_000.0)
+    ii, jj = np.nonzero(d <= dist_m)
     want = {(int(a), int(b)) for a, b in zip(ii, jj) if a < b}
     assert got_pairs == want and len(want) > 0
+    return want
+
+
+def test_dwithin_join_geog_matches_brute(spark):
+    import pandas as pd
+    rng = np.random.default_rng(11)
+    n = 120
+    pdf = pd.DataFrame({"pid": np.arange(n),
+                        "lon": rng.uniform(-10, 35, n),
+                        "lat": rng.uniform(32, 72, n)})
+    _assert_geog_dwithin_is_brute(spark, pdf, 300_000.0, 6)
 
 
 def test_dwithin_join_geog_high_latitude(spark):
@@ -101,22 +106,24 @@ def test_dwithin_join_geog_high_latitude(spark):
     dropped: the disk radius is now sized per row from the row's own
     latitude (ADVICE r2)."""
     import pandas as pd
-    from mobilitydb_spark import joins
     pdf = pd.DataFrame({"pid": [0, 1, 2, 3],
                         "lon": [0.0, 25.0, 120.0, 122.0],
                         "lat": [84.0, 84.0, 86.5, 86.5]})
-    df = spark.createDataFrame(pdf)
-    l = df.selectExpr("pid AS l_id", "lon", "lat")
-    r = df.selectExpr("pid AS r_id", "lon", "lat")
-    got = joins.dwithin_join_geog(l, r, 300_000.0, res=6).toPandas()
-    got_pairs = {(a, b) for a, b in zip(got["l_id"], got["r_id"]) if a < b}
-    d = geo.haversine_m(pdf["lon"].to_numpy()[:, None],
-                        pdf["lat"].to_numpy()[:, None],
-                        pdf["lon"].to_numpy()[None, :],
-                        pdf["lat"].to_numpy()[None, :])
-    ii, jj = np.nonzero(d <= 300_000.0)
-    want = {(int(a), int(b)) for a, b in zip(ii, jj) if a < b}
-    assert got_pairs == want and len(want) > 0
+    _assert_geog_dwithin_is_brute(spark, pdf, 300_000.0, 6)
+
+
+def test_dwithin_join_geog_across_antimeridian(spark):
+    """Pairs on either side of ±180° longitude are found: the ring
+    wraps the grid's columns, at the equator, at 60° and beside the
+    pole, and the far neighbours on the same side stay out."""
+    import pandas as pd
+    lon = [179.9, -179.9, 179.5, -179.5, -179.99, 178.8, 170.0, -170.0,
+           179.0, -178.0]
+    lat = [10.0, 10.0, 60.0, 60.0, -45.0, -45.5, 10.0, 60.0, 86.0, 86.0]
+    pdf = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
+    want = _assert_geog_dwithin_is_brute(spark, pdf, 150_000.0, 6)
+    assert {(0, 1), (2, 3), (4, 5), (8, 9)} <= want
+    assert not {(0, 6), (3, 7)} & want
 
 
 def test_geog_covers_polygon_and_line_operands():

@@ -1,4 +1,4 @@
-"""Distributed join strategy tests: shuffle PIP (± salting), dwithin,
+"""Distributed join strategy tests: broadcast and shuffle PIP, dwithin,
 kNN — each checked against a brute-force reference."""
 
 import numpy as np
@@ -46,30 +46,6 @@ def test_shuffle_join_matches_bruteforce(spark, pts, grid_polys):
                for r in got.collect()}
     want = _brute_pip(pts.toPandas(), grid_polys)
     assert got_set == want and len(want) > 0
-
-
-def test_shuffle_join_salted_same_result(spark, pts, grid_polys):
-    polys_df = spark.createDataFrame(
-        grid_polys, "poly_id bigint, layer string, geom_wkb binary, srid int")
-    # force-salt every populated cell: results must be identical
-    hot = [r["cell"] for r in
-           pts.select(joins.cells.cell_col(F.col("lon"), F.col("lat"), 10)
-                      .alias("cell")).distinct().collect()]
-    plain = joins.pip_join_shuffle(pts, polys_df, res=10)
-    salted = joins.pip_join_shuffle(pts, polys_df, res=10,
-                                    hot=hot, n_salts=4)
-    a = {(r["url"], r["tag_idx"], r["poly_id"]) for r in plain.collect()}
-    b = {(r["url"], r["tag_idx"], r["poly_id"]) for r in salted.collect()}
-    assert a == b and len(a) > 0
-
-
-def test_hot_cells_detects_skew_cluster(spark, pts):
-    # the fixtures put ~30% of tags in a 0.2° cluster at (8E, 50N)
-    hot = joins.hot_cells(pts, res=6, threshold=pts.count() // 10)
-    assert len(hot) >= 1
-    import mobilitydb_spark.cells as C
-    hot_cell = C.cell_np(np.array([8.0]), np.array([50.0]), 6)[0]
-    assert int(hot_cell) in [int(h) for h in hot]
 
 
 def test_dwithin_join_matches_bruteforce(spark, pts):
@@ -551,6 +527,37 @@ def test_knn_join_is_lazy_with_one_window(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_spatial_joins_are_lazy_without_pandas_passes(spark, pts,
+                                                     grid_polys):
+    """Calling either PIP join or either dwithin join starts no Spark
+    job, and no executed plan holds a MapInPandas node: covers, levels
+    and rings are Catalyst expressions."""
+    polys_df = spark.createDataFrame(
+        grid_polys, "poly_id bigint, layer string, geom_wkb binary, srid int")
+    # a pandas-built copy: the fixture's own plan has a MapInPandas
+    pts = spark.createDataFrame(pts.toPandas())
+    a = pts.select(F.concat_ws("#", "url", "tag_idx").alias("l_id"),
+                   "lon", "lat").limit(100)
+    b = pts.select(F.concat_ws("#", "url", "tag_idx").alias("r_id"),
+                   "lon", "lat")
+    sc = spark.sparkContext
+    sc.setJobGroup("spatial-lazy", "spatial join laziness")
+    try:
+        outs = {"broadcast": pipeline.pip_join_broadcast(pts, grid_polys),
+                "shuffle": joins.pip_join_shuffle(pts, polys_df, res=10),
+                "dwithin": joins.dwithin_join(a, b, 0.5, res=8),
+                "geog": joins.dwithin_join_geog(a, b, 30_000.0, res=6)}
+        assert list(sc.statusTracker().getJobIdsForGroup("spatial-lazy")) \
+            == []
+        for name, out in outs.items():
+            assert len(out.collect()) > 0, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name, out in outs.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan, (name, plan)
+
+
 def test_pip_joins_agree_on_boundary_points(spark):
     """Both PIP joins apply points_in_polygon's closed-boundary rule:
     interior, on-edge, corner and ±eps-band points against rectangles
@@ -606,14 +613,19 @@ def test_pip_joins_agree_on_boundary_points(spark):
         "lang": "en", "text": [f"geo:{y!r},{x!r}" for x, y in pts]}))
     flag = pipeline.flagship(pages, polys_pdf).select(
         F.substring("url", 2, 9).cast("long").alias("pt"), "poly_id")
+    # the shuffle join covers the 20°×30° rectangles a level coarser
+    # than the rest, so its multi-level path runs
+    polys_df = spark.createDataFrame(polys_pdf,
+                                     "poly_id bigint, geom_wkb binary")
+    levels = joins.polygon_dim(polys_df, 10).select("r").distinct()
+    assert levels.count() >= 2
     got = {}
     for name, df in (
             ("flagship", flag),
             ("broadcast", pipeline.pip_join_broadcast(pts_df, polys_pdf)),
             ("broadcast_res5", pipeline.pip_join_broadcast(
                 pts_df, polys_pdf, index_res=5)),
-            ("shuffle", joins.pip_join_shuffle(pts_df, spark.createDataFrame(
-                polys_pdf, "poly_id bigint, geom_wkb binary"), res=10))):
+            ("shuffle", joins.pip_join_shuffle(pts_df, polys_df, res=10))):
         got[name] = {(r["pt"], r["poly_id"]) for r in df.collect()}
         assert got[name] == want, (name, sorted(got[name] ^ want))
     # the shared edge, the shared corner and the hole's edge count

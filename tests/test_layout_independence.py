@@ -19,11 +19,16 @@ SF_DIR = "/root/testdata/sf0.001"
 PARTITIONS = "spark.sql.shuffle.partitions"
 BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 AQE = "spark.sql.adaptive.enabled"
-# the session default is {8, 10000, true} (tests/conftest.py)
+COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+# the session default is {8, 10000, true, true} (tests/conftest.py); at
+# sf0.001 AQE coalesces most shuffles to one partition, so
+# ``no_coalesce`` keeps AQE's other rules and every partition
 LAYOUTS = {
     "one_partition": {PARTITIONS: "1", BATCH: "10000", AQE: "true"},
     "odd_splits": {PARTITIONS: "3", BATCH: "7", AQE: "true"},
     "aqe_off": {PARTITIONS: "8", BATCH: "10000", AQE: "false"},
+    "no_coalesce": {PARTITIONS: "8", BATCH: "10000", AQE: "true",
+                    COALESCE: "false"},
 }
 
 
